@@ -1603,7 +1603,7 @@ object IndexQueries {
       require(after.files == before.files,
         s"q173: merge-on-read delete rewrote data files " +
           s"(${(after.files.toSet -- before.files.toSet).size} new)")
-      require(after.dvs.nonEmpty, "q173: no deletion vector was committed")
+      require(after.hasDvs, "q173: no deletion vector was committed")
       // merge-on-read UPDATE: mask + append in ONE commit, no rewrite
       log.update(col("l_orderkey") >= 200 && col("l_orderkey") <= 220,
         Map("price" -> (col("price") * lit(2))))
@@ -1697,8 +1697,8 @@ object IndexQueries {
   /** B2 MANIFEST-ANSWERED AGGREGATE PUSHDOWN (r14,
     * [[graft.sources.GraftLogScanBuilder]] `SupportsPushDownAggregates`):
     * a global COUNT(*)/MIN/MAX over a logged table folds from the
-    * manifest's per-file exact row counts (`Snapshot.rows`, r14) and
-    * footer min/max (`Snapshot.stats`) into a one-row LocalScan — at
+    * manifest's per-file exact row counts (`FileEntry.rows`, r14) and
+    * footer min/max (`FileEntry.colStats`) into a one-row LocalScan — at
     * 100 TB the query opens ZERO data files (the manifest plays the
     * reference's DynamoDB item metadata, `/root/reference/index.js:305-314`).
     * REQUIRED in-body: the plan is a LocalTableScan with no BatchScan
@@ -1743,7 +1743,7 @@ object IndexQueries {
       val (cntRow, mnDf) =
         try {
           s.sql(s"DELETE FROM $cat.t WHERE l_orderkey >= 100 AND l_orderkey <= 140")
-          require(graft.sources.CommitLog(s, s"$root/t").snapshot().dvs.nonEmpty,
+          require(graft.sources.CommitLog(s, s"$root/t").snapshot().hasDvs,
             "q175: the small delete was not merge-on-read")
           val c = s.table(s"$cat.t").agg(count(lit(1)).as("cnt_dv"))
           requireLocal(c, "the post-DV COUNT(*)")
@@ -1815,7 +1815,7 @@ object IndexQueries {
       // per-file counts (commit order) give the exact bound
       val log = graft.sources.CommitLog(s, s"$root/t")
       val snap = log.snapshot()
-      val fileRows = snap.files.map(f => snap.rows(f))
+      val fileRows = snap.files.map(f => snap.entry(f).rows.get)
       val k = fileRows(0) + fileRows(1) / 2
       val lim = s.table(s"$cat.t").limit(k.toInt)
       val limCnt = lim.count()
@@ -1877,7 +1877,7 @@ object IndexQueries {
         "q177: merge-on-read MERGE must retire no data file")
       require(after.files.size > before.files.size,
         "q177: updated + inserted rows must land as appended files")
-      require(after.dvs.nonEmpty, "q177: no deletion vector was committed")
+      require(after.hasDvs, "q177: no deletion vector was committed")
       log.read().groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
           sum(col("price")).cast("double").as("revenue"),
@@ -1947,7 +1947,7 @@ object IndexQueries {
       val counts =
         try {
           s.sql(s"DELETE FROM $cat.t WHERE o_orderstatus = 'P'")
-          require(graft.sources.CommitLog(s, s"$root/t").snapshot().dvs.nonEmpty,
+          require(graft.sources.CommitLog(s, s"$root/t").snapshot().hasDvs,
             "q178: the partition delete was not merge-on-read")
           val c = s.table(s"$cat.t").groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n_after"))
@@ -2009,7 +2009,7 @@ object IndexQueries {
       val live =
         try {
           s.sql(s"DELETE FROM $cat.t WHERE o_orderstatus = 'F'")
-          require(graft.sources.CommitLog(s, s"$root/t").snapshot().dvs.nonEmpty,
+          require(graft.sources.CommitLog(s, s"$root/t").snapshot().hasDvs,
             "q179: the partition delete was not merge-on-read")
           distinctLocal("post-mask")
         } finally {
@@ -2076,7 +2076,7 @@ object IndexQueries {
         "q180: merge-on-read SQL MERGE must retire no data file")
       require(after.files.size > before.files.size,
         "q180: updated + inserted rows must land as appended files")
-      require(after.dvs.nonEmpty,
+      require(after.hasDvs,
         "q180: no deletion vector — the SQL merge fell back to a rewrite path")
       s.table(s"$cat.t").groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -2297,8 +2297,8 @@ object IndexQueries {
       val snap = graft.sources.CommitLog(s, s"$root/t").snapshot()
       // snapshot file order IS commit order — the same order the
       // covering-prefix walk uses
-      val fFiles = snap.files.filter(f => snap.parts(f) == "F")
-        .map(f => snap.rows(f))
+      val fFiles = snap.files.filter(f => snap.entry(f).partTag.contains("F"))
+        .map(f => snap.entry(f).rows.get)
       require(fFiles.size == 3, s"q183: expected 3 F files, got ${fFiles.size}")
       val k = (fFiles.head + 1).toInt // needs exactly the first 2 files
       val lim = s.table(s"$cat.t").filter(col("o_orderstatus") === "F").limit(k)
@@ -2419,11 +2419,11 @@ object IndexQueries {
       val mlog = graft.sources.CommitLog(s, s"$root/m")
       mlog.appendPartitioned(o, "months(ts)")
       val msnap = mlog.snapshot()
-      require(msnap.files.forall(msnap.parts.contains),
+      require(msnap.files.forall(msnap.entry(_).partTag.isDefined),
         "q185: months layout must tag every file")
       // the month tag for 1997-03 = (1997-1970)*12 + 2
       val tag = ((1997 - 1970) * 12 + 2).toString
-      val monthFiles = msnap.files.filter(f => msnap.parts(f) == tag)
+      val monthFiles = msnap.files.filter(f => msnap.entry(f).partTag.contains(tag))
       val nMonth = mlog.readPartitions(Seq(tag)).count()
       require(monthFiles.nonEmpty,
         "q185: 1997-03 must exist in the synthetic orders")
@@ -2431,7 +2431,7 @@ object IndexQueries {
       val blog = graft.sources.CommitLog(s, s"$root/b")
       blog.appendPartitioned(o, "bucket(8,o_custkey)")
       val before = blog.snapshot()
-      require(before.files.map(before.parts).toSet.size <= 8,
+      require(before.files.map(before.entry(_).partTag.get).toSet.size <= 8,
         "q185: bucket(8) must yield at most 8 partitions")
       val batch = o.filter(col("o_custkey") % 50 === 0)
         .withColumn("price", (col("price") * 2).cast("double"))
@@ -2441,7 +2441,7 @@ object IndexQueries {
       blog.upsertPartitioned(batch, Seq("o_orderkey", "o_custkey"),
         graft.sources.CommitLog.LastWins, "bucket(8,o_custkey)")
       val after = blog.snapshot()
-      val untouchedBefore = before.files.filter(f => !touchedTags(before.parts(f)))
+      val untouchedBefore = before.files.filter(f => !touchedTags(before.entry(f).partTag.get))
       require(untouchedBefore.forall(after.files.contains),
         "q185: a bucket-scoped upsert must not rewrite untouched buckets")
       require(after.files.exists(f => !before.files.contains(f)),
@@ -2756,7 +2756,7 @@ object IndexQueries {
         val dayAggRow = dayAgg.collect()
         // the plain day filter prunes to the one day partition's files
         val snap = graft.sources.CommitLog(s, s"$root/t").snapshot()
-        val dayFiles = snap.parts.values.count(_ == "19786") // 2024-03-04
+        val dayFiles = snap.entries.values.count(_.partTag.contains("19786")) // 2024-03-04
         val plain = s.table(s"$cat.t").filter(col("ts").cast("date") === day)
         require(scanned(plain) == dayFiles && dayFiles >= 1,
           s"q190: the day filter must scan the day's $dayFiles file(s), " +
@@ -3015,7 +3015,7 @@ object IndexQueries {
       require(snap.version == v0 + 1, "q193: the five-clause merge is ONE commit")
       require(files0.subsetOf(snap.files.toSet),
         "q193: merge-on-read must retire no pre-existing data file")
-      require(snap.dvs.nonEmpty, "q193: the commit must carry deletion vectors")
+      require(snap.hasDvs, "q193: the commit must carry deletion vectors")
       log.read()
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -3214,7 +3214,7 @@ object IndexQueries {
         priorDeltas.fold(s.conf.unset("spark.graft.dv.sumDeltas.enabled"))(
           s.conf.set("spark.graft.dv.sumDeltas.enabled", _))
       }
-      require(log.snapshot().dvs.nonEmpty, "q195: the delete must take the DV path")
+      require(log.snapshot().hasDvs, "q195: the delete must take the DV path")
       val after = s.table(s"$cat.t").agg(sum(col("o_orderkey")).as("s"))
       require(planOf(after).contains("BatchScan"),
         s"q195: a DV must refuse the sum fold:\n${planOf(after)}")
@@ -3318,7 +3318,7 @@ object IndexQueries {
       } finally priorFloor.fold(s.conf.unset("spark.graft.dv.minTouchedBytes"))(
         s.conf.set("spark.graft.dv.minTouchedBytes", _))
       val snap = log.snapshot()
-      require(snap.dvs.valuesIterator.flatten.map(_.count).sum == 2L,
+      require(snap.entries.values.iterator.map(_.maskedCount).sum == 2L,
         "q196: both deletes must take the DV path (2 masked rows)")
       def planOf(df: DataFrame): String =
         df.queryExecution.executedPlan.toString
@@ -3382,7 +3382,7 @@ object IndexQueries {
       try log2.delete(col("o_orderkey") === kmax)
       finally priorFloor.fold(s.conf.unset("spark.graft.dv.minTouchedBytes"))(
         s.conf.set("spark.graft.dv.minTouchedBytes", _))
-      require(log2.snapshot().dvs.nonEmpty,
+      require(log2.snapshot().hasDvs,
         "q196: the sums-free delete must take the DV path")
       val cnt2 = s.table(s"$cat.t2").agg(count(col("qty")).as("n2"))
       require(planOf(cnt2).contains("LocalTableScan")
@@ -3583,9 +3583,9 @@ object IndexQueries {
         base.filter(expr("CAST(ts AS DATE) > DATE '2024-01-04'"))
           .writeTo(s"$cat.t").append()
         val mixed = log.snapshot()
-        val dayFiles = mixed.files.filter(f => mixed.specIdOf(f) == 0).toSet
+        val dayFiles = mixed.files.filter(f => mixed.entry(f).specId == 0).toSet
         require(dayFiles == before.files.toSet
-            && mixed.files.exists(f => mixed.specIdOf(f) == 1),
+            && mixed.files.exists(f => mixed.entry(f).specId == 1),
           "q198: old files keep spec 0, new files stamp spec 1")
         // a day-aligned range selects ONE day file + 24 hour files —
         // judged each under ITS OWN spec, the filter is exact and the
@@ -3619,7 +3619,7 @@ object IndexQueries {
         require(migrated == dayFiles.size,
           s"q198: migrate must rewrite the ${dayFiles.size} stale files, did $migrated")
         val post = log.snapshot()
-        require(post.files.forall(f => post.specIdOf(f) == 1),
+        require(post.files.forall(f => post.entry(f).specId == 1),
           "q198: post-migration every file is current-spec")
         require((post.files.toSet intersect dayFiles).isEmpty
             && (mixed.files.toSet -- dayFiles).subsetOf(post.files.toSet),
@@ -3692,7 +3692,7 @@ object IndexQueries {
         WHEN NOT MATCHED THEN INSERT *""")
       finally priorFloor.fold(s.conf.unset("spark.graft.dv.minTouchedBytes"))(
         s.conf.set("spark.graft.dv.minTouchedBytes", _))
-      require(log.snapshot().dvs.nonEmpty,
+      require(log.snapshot().hasDvs,
         "q199: the merge must take the merge-on-read path")
       val counts = o.agg(
         sum(when(col("o_orderkey") % 13 === 0, 1L).otherwise(0L)),
@@ -3788,8 +3788,8 @@ object IndexQueries {
         .writeTo(s"$cat.t").tableProperty("merge.log", "true").create()
       val log = graft.sources.CommitLog(s, s"$root/t")
       val snap = log.snapshot()
-      require(snap.files.nonEmpty && snap.stats.valuesIterator.forall(m =>
-          !m.keysIterator.exists(kk => kk == "v" || kk.startsWith("v."))),
+      require(snap.files.nonEmpty && snap.entries.values.forall(e =>
+          !e.colStats.keysIterator.exists(kk => kk == "v" || kk.startsWith("v."))),
         "q200: a variant column must harvest NO stats (no shredding " +
           "— absence refuses, conservative)")
       // typed extraction: missing paths yield NULL, never an error —

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.UUID
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Layout under the table root:
   * {{{
-  *   _graft_log/00000000000000000000.json   // {version, action, files, schema, txn}
+  *   _graft_log/00000000000000000000.json   // one manifest ([[ManifestCodec]])
   *   data/<uuid>-part-*.parquet             // immutable once referenced
   * }}}
   * A manifest's `action` is `add` (its files join the live set) or
@@ -75,7 +76,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * 1,000-partition backfill is one job, not 1,000 serial ones.
   *
   * Every committed file also carries per-column min/max harvested from
-  * its parquet footer ([[statsFor]]) — the manifest-level analog of the
+  * its parquet footer ([[entriesFor]]) — the manifest-level analog of the
   * sort-key seek the reference does on its DynamoDB range key
   * (/root/reference/index.js:305-314): [[readRange]] skips files whose
   * range can't overlap the predicate WITHOUT opening them, which is
@@ -86,6 +87,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (/root/reference/index.js:41-59) without diffing snapshots itself.
   */
 final class CommitLog private (spark: SparkSession, tableRoot: String) {
+  import CommitLog.{FileEntry, Manifest, Snapshot}
 
   private val rootPath = new Path(tableRoot)
   private val logDir = new Path(rootPath, "_graft_log")
@@ -94,7 +96,6 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   // the atomic create-if-absent behind every manifest publish —
   // pluggable per storage system (object stores need conditional PUT)
   private val logStore: LogStore = LogStore.forSession(spark)
-  private def mapper = new ObjectMapper()
 
   /** Resolve a manifest file entry to its readable path. Entries are
     * normally table-root-relative (`data/part-….parquet`); a SHALLOW
@@ -106,69 +107,6 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * concatenation sites only. */
   private def entryPath(f: String): String =
     if (CommitLog.isExternalEntry(f)) f else s"$tableRoot/$f"
-
-  /** The folded state of the log at one version. `parts` tags data
-    * files with their partition value (string form) — present only for
-    * files written by the partitioned write path. `stats` carries each
-    * file's per-column (min, max) footer statistics (Long, Double or
-    * String values; columns without harvestable stats are absent).
-    * `blooms` carries per-file per-column Bloom filters for tables
-    * written through [[withBloomIndex]]. `physRetired` lists the
-    * PHYSICAL column names of dropped columns — a later ADD of the
-    * same logical name must take a fresh physical name or the old
-    * files' data would silently resurrect. */
-  final case class Snapshot(version: Long, files: Seq[String],
-      schema: Option[StructType], txns: Map[String, Long],
-      parts: Map[String, String] = Map.empty,
-      stats: Map[String, Map[String, (Any, Any)]] = Map.empty,
-      blooms: Map[String, Map[String, CommitLog.BloomF]] = Map.empty,
-      physRetired: Seq[String] = Nil,
-      // merge-on-read DELETION VECTORS (r13): data file → the DV
-      // sidecars that mask its deleted row positions, in commit order.
-      // A file's masked view = its rows minus the union of its DVs'
-      // positions; a rewrite retiring the file drops its DVs.
-      dvs: Map[String, Seq[CommitLog.DvRef]] = Map.empty,
-      // per-file EXACT physical row counts (r14, footer-harvested at
-      // commit time like `stats`) — what lets COUNT(*) and LIMIT
-      // answer from the manifest without opening a single data file.
-      // Absent for files committed by pre-r14 manifests (consumers
-      // must treat a missing entry as unknown, never as zero).
-      rows: Map[String, Long] = Map.empty,
-      // per-file per-column EXACT null counts (r14) — COUNT(col) =
-      // Σ(rows − nulls). Absent when any chunk of the column omitted
-      // numNulls (or the manifest predates r14): unknown, never zero.
-      nulls: Map[String, Map[String, Long]] = Map.empty,
-      // r18 PARTITION-SPEC EVOLUTION (Iceberg-style, metadata-only):
-      // `specs` is the append-only registry of rendered partition
-      // specs this table has written under (empty until the first
-      // [[evolvePartitionSpec]] — the pre-r18 single-spec world);
-      // `fileSpec` maps a tagged data file to its registry index
-      // (absent = 0, the create-time spec). A file's TAG is only
-      // meaningful under ITS spec — every tag consumer judges
-      // per-file or refuses on a mix.
-      specs: Seq[String] = Nil,
-      fileSpec: Map[String, Int] = Map.empty) {
-    /** Registry index of the CURRENT spec (0 while the registry is
-      * empty — the single-spec world). */
-    def currentSpecId: Int = math.max(0, specs.size - 1)
-    /** The spec id a file's tag was written under. */
-    def specIdOf(f: String): Int = fileSpec.getOrElse(f, 0)
-    /** True when every file in `fs` is tagged under the CURRENT spec —
-      * the admission every whole-table tag interpretation needs. */
-    def allCurrentSpec(fs: Seq[String]): Boolean =
-      specs.isEmpty || fs.forall(f => specIdOf(f) == currentSpecId)
-    /** Rows masked out of `f` by its deletion vectors — EXACT: every
-      * DV find-scan reads the already-masked view ([[readLiveWithPos]]
-      * subtracts prior DVs before computing positions), so sidecar
-      * position sets on one file are disjoint by construction and
-      * their counts sum. */
-    def maskedCount(f: String): Long =
-      dvs.getOrElse(f, Nil).iterator.map(_.count).sum
-    /** The LIVE (post-DV) row count of `f`, when the manifest knows
-      * the physical count. */
-    def liveRowCount(f: String): Option[Long] =
-      rows.get(f).map(n => math.max(0L, n - maskedCount(f)))
-  }
 
   // ── COLUMN MAPPING (rename/drop without rewriting data) ───────────
   // Delta-style "name mapping": every column has a stable PHYSICAL
@@ -218,7 +156,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * result back to logical names. Identity-mapped tables take the
     * plain read — no extra projection node. */
   private def readFiles(sch: StructType, files: Seq[String],
-      dvs: Map[String, Seq[CommitLog.DvRef]] = Map.empty): DataFrame = {
+      dvs: String => Seq[CommitLog.DvRef] = _ => Nil): DataFrame = {
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
@@ -282,9 +220,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   /** Read+merge the masked positions for `files` (basename-keyed,
     * sorted, deduplicated). Sidecars are immutable — cached per path
     * process-wide. Bounded by the write policy's row caps. */
-  private[sources] def dvPositions(dvs: Map[String, Seq[CommitLog.DvRef]],
+  private[sources] def dvPositions(dvs: String => Seq[CommitLog.DvRef],
       files: Seq[String]): Map[String, Array[Long]] = {
-    val refs = files.flatMap(f => dvs.getOrElse(f, Nil)).map(_.path).distinct
+    val refs = files.flatMap(dvs).map(_.path).distinct
     if (refs.isEmpty) return Map.empty
     val perSidecar: Seq[Map[String, Array[Long]]] = refs.map { rel =>
       val abs = entryPath(rel)
@@ -308,9 +246,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * run on the loaded scan itself (`_metadata` is resolvable there,
     * not after a projection). No-op without DVs on the read files. */
   private def subtractDvs(raw: DataFrame,
-      dvs: Map[String, Seq[CommitLog.DvRef]], files: Seq[String]): DataFrame = {
+      dvs: String => Seq[CommitLog.DvRef], files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, udf}
-    val relevant = files.filter(dvs.contains)
+    val relevant = files.filter(dvs(_).nonEmpty)
     if (relevant.isEmpty) return raw
     val pos = dvPositions(dvs, relevant)
     if (pos.isEmpty) return raw
@@ -338,7 +276,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         if (withId) sch.add("_row_id", org.apache.spark.sql.types.StringType)
         else sch)
-    val pos = dvPositions(refs, files)
+    val pos = dvPositions(refs.getOrElse(_, Nil), files)
     val bc = spark.sparkContext.broadcast(pos)
     val hit = udf((fp: String, idx: Long) => {
       val n = fp.substring(fp.lastIndexOf('/') + 1)
@@ -365,7 +303,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, reverse, split}
     val raw = pqRead(physSchema(sch), files.map(entryPath))
-    subtractDvs(raw, s.dvs, files)
+    subtractDvs(raw, s.dvsOf, files)
       .withColumn("__dv_f",
         element_at(reverse(split(col("_metadata.file_path"), "/")), 1))
       .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -588,10 +526,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   private def effectiveSumCfg(snap: () => Snapshot): Option[Seq[String]] = {
     val derived: Seq[String] = {
       val s = snap()
-      val physCols = s.stats.valuesIterator
-        .flatMap(_.keysIterator)
-        .filter(_.startsWith(CommitLog.SumKeyPrefix))
-        .map(_.drop(CommitLog.SumKeyPrefix.length)).toSeq.distinct
+      val physCols = s.entries.valuesIterator
+        .flatMap(_.sums.keysIterator).toSeq.distinct
       if (physCols.isEmpty) Nil
       else {
         val logByPhys: Map[String, String] = s.schema
@@ -605,10 +541,10 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   }
 
   /** One aggregate job over the just-written files: each configured
-    * column's EXACT per-file sum, as [[CommitLog.SumKeyPrefix]]-keyed
-    * pseudo stats entries (Long for integrals, [[CommitLog.DecV]] for
-    * decimals — both ride the ordinary stats channel, so restatements,
-    * checkpoints, clones and restores carry them for free). The sums
+    * column's EXACT per-file sum, keyed by physical column — the
+    * entry's `sums` (Long for integrals, [[CommitLog.DecV]] for
+    * decimals; restatements, checkpoints, clones and restores carry
+    * them with the rest of the entry). The sums
     * compute in DECIMAL(38) — exact; a per-file partial that cannot
     * represent (beyond Long unscaled / 38 digits) or a column of an
     * order-dependent type is simply OMITTED (the fold's admission
@@ -616,7 +552,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * whole batch rather than failing the write — the repair for files
     * that missed their partials is any rewrite (OPTIMIZE re-harvests). */
   private def sumsFor(relPaths: Seq[String], logicalCols: Seq[String],
-      snap: => Snapshot): Map[String, Map[String, (Any, Any)]] =
+      snap: => Snapshot): Map[String, Map[String, Any]] =
     scala.util.Try {
       import org.apache.spark.sql.functions.{col, input_file_name, try_sum}
       import org.apache.spark.sql.types._
@@ -662,7 +598,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
                       case CommitLog.DecV(u, 0) => java.lang.Long.valueOf(u)
                     }
                 }
-                repr.map(v => (CommitLog.SumKeyPrefix + c) -> ((v, v): (Any, Any)))
+                repr.map(c -> _)
               }
             }
             rel -> entries.toMap
@@ -675,7 +611,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       System.err.println(s"[graft] $tableRoot: sum-stats harvest failed " +
         s"for ${relPaths.size} file(s) — committing without partials " +
         s"(a rewrite re-harvests): $e")
-      Map.empty[String, Map[String, (Any, Any)]]
+      Map.empty[String, Map[String, Any]]
     }.get
 
   /** STATS-ONLY SUM BACKFILL (r17, VERDICT r16 #3): give every live
@@ -734,36 +670,28 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         "resolves to a table column")
       val sumPhys = sumFields.map(f => lc(physName(f))).toSet
       val cntOnly = cntFields.filterNot(f => sumPhys(lc(physName(f))))
-      def dvTot(fl: String): Long =
-        s.dvs.getOrElse(fl, Nil).iterator.map(_.count).sum
-      def zeroFor(fl: String, phys: String): Boolean =
-        s.rows.get(fl).contains(0L) ||
-          ((s.rows.get(fl), s.nulls.get(fl).flatMap(_.get(phys))) match {
-            case (Some(r), Some(n)) => n == r
-            case _ => false
-          })
-      val needs = s.files.filter { fl =>
-        val st = s.stats.getOrElse(fl, Map.empty)
-        val unaccounted = dvTot(fl) > 0L &&
-          !st.get(CommitLog.SumDvKey).exists {
-            case (n: Long, _) => n == dvTot(fl)
-            case _ => false
-          }
+      def zeroFor(e: FileEntry, phys: String): Boolean =
+        e.rows.contains(0L) || ((e.rows, e.nulls.get(phys)) match {
+          case (Some(r), Some(n)) => n == r
+          case _ => false
+        })
+      val needs = s.entries.values.filter { e =>
+        val dvd = e.maskedCount > 0L
         // a provably-empty file (or all-null column) has no partial
         // to store — already covered, skip forever
         val missingSum = sumFields.exists { f =>
           val phys = physName(f)
-          !st.contains(CommitLog.SumKeyPrefix + phys) && !zeroFor(fl, phys)
+          !e.sums.contains(phys) && !zeroFor(e, phys)
         }
         // r18: an accounted DV'd file still needs a live count for a
         // requested column that never got one (legacy accounting, a
         // column added after it)
-        val missingNn = dvTot(fl) > 0L && cntFields.exists { f =>
+        val missingNn = dvd && cntFields.exists { f =>
           val phys = physName(f)
-          !st.contains(CommitLog.SumNPrefix + phys) && !zeroFor(fl, phys)
+          !e.liveNonNull.contains(phys) && !zeroFor(e, phys)
         }
-        unaccounted || missingSum || missingNn
-      }
+        (dvd && !e.dvAccounted) || missingSum || missingNn
+      }.toSeq
       if (needs.isEmpty) return (s.version, 0)
       // ONE masked read over exactly the files needing partials: the
       // live sums and live non-null counts, grouped per file. Live
@@ -771,7 +699,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       // carries a DV (a pure sum backfill), the read stays as narrow
       // as the sum set instead of scanning the whole schema (review
       // r18)
-      val dvNeedy = needs.exists(fl => dvTot(fl) > 0L)
+      val dvNeedy = needs.exists(_.maskedCount > 0L)
       val readFields = sumFields ++ (if (dvNeedy) cntOnly else Nil)
       val narrow = StructType(readFields.toArray)
       val aggs = sumFields.map(f =>
@@ -780,18 +708,23 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           case _ => DecimalType(38, 0)
         })).as(s"__s_${f.name}")) ++
         readFields.map(f => count(col(s"`${f.name}`")).as(s"__c_${f.name}"))
-      val harvested = readLiveWithPos(s, narrow, needs)
+      val harvested = readLiveWithPos(s, narrow, needs.map(_.path))
         .groupBy(col("__dv_f"))
         .agg(aggs.head, aggs.tail: _*).collect()
         .map(r => r.getString(0) -> r).toMap
-      val restated: Map[String, Map[String, (Any, Any)]] =
-        needs.map { fl =>
-          // pre-r14 files also refresh footer stats (row/null counts —
-          // what the fold's global admission needs) in the same commit
-          val base = if (s.rows.contains(fl)) s.stats.getOrElse(fl, Map.empty)
-            else statsForOne(fl)
-          val row = harvested.get(new Path(fl).getName)
-          var m = base
+      // each needy file's statement: its restated stats block, plus
+      // fresh footer stats (row/null counts — what the fold's global
+      // admission needs) for a file committed without them
+      val restated: Seq[FileEntry] =
+        needs.map { e =>
+          val dvTot = e.maskedCount
+          val base =
+            if (e.rows.isDefined) FileEntry(e.path, colStats = e.colStats,
+              sums = e.sums, liveNonNull = e.liveNonNull, dvAcc = e.dvAcc)
+            else statsForOne(e.path)
+          val row = harvested.get(new Path(e.path).getName)
+          var sums = base.sums
+          var nn = base.liveNonNull
           def liveCnt(f: org.apache.spark.sql.types.StructField): Long =
             row.map(r => r.getLong(r.fieldIndex(s"__c_${f.name}")))
               .getOrElse(0L)
@@ -823,25 +756,19 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
               }
             }
             repr match {
-              case Some(v) =>
-                m = m.updated(CommitLog.SumKeyPrefix + phys, (v, v))
+              case Some(v) => sums = sums.updated(phys, v)
               case None => // unrepresentable → stays absent, fold refuses
-                m = m - (CommitLog.SumKeyPrefix + phys)
+                sums = sums - phys
             }
-            if (dvTot(fl) > 0L) {
-              val nn = java.lang.Long.valueOf(liveNn)
-              m = m.updated(CommitLog.SumNPrefix + phys, (nn, nn))
-            }
+            if (dvTot > 0L) nn = nn.updated(phys, liveNn)
           }
-          if (dvTot(fl) > 0L) {
+          var dvAcc = base.dvAcc
+          if (dvTot > 0L) {
             // r18: count-only columns get their live non-null counts
             // too — COUNT(col) repairs for every type, not just the
             // summable set
-            cntOnly.foreach { f =>
-              val nn = java.lang.Long.valueOf(liveCnt(f))
-              m = m.updated(CommitLog.SumNPrefix + physName(f), (nn, nn))
-            }
-            // stamping SumDvKey certifies the file's WHOLE sum/count
+            cntOnly.foreach(f => nn = nn.updated(physName(f), liveCnt(f)))
+            // stamping dvAcc certifies the file's WHOLE sum/count
             // evidence as live-exact. If the file was UNACCOUNTED
             // before this pass, any entry this pass did NOT re-harvest
             // (a columns-subset call after a legacy DV) still bakes in
@@ -849,36 +776,27 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             // them (absence refuses; a later full harvest repairs). A
             // previously-ACCOUNTED file's other entries are live-exact
             // and keep (review r18).
-            val priorAccounted = s.stats.getOrElse(fl, Map.empty)
-              .get(CommitLog.SumDvKey).exists {
-                case (n: Long, _) => n == dvTot(fl)
-                case _ => false
-              }
-            if (!priorAccounted) {
+            if (!e.dvAccounted) {
               val sumKeep = sumFields.map(f => lc(physName(f))).toSet
               val cntKeep = cntFields.map(f => lc(physName(f))).toSet
-              m = m.filterNot { case (k, _) =>
-                (k.startsWith(CommitLog.SumKeyPrefix)
-                    && !sumKeep(lc(k.drop(CommitLog.SumKeyPrefix.length)))) ||
-                (k.startsWith(CommitLog.SumNPrefix)
-                    && !cntKeep(lc(k.drop(CommitLog.SumNPrefix.length))))
-              }
+              sums = sums.filter(kv => sumKeep(lc(kv._1)))
+              nn = nn.filter(kv => cntKeep(lc(kv._1)))
             }
-            val t = java.lang.Long.valueOf(dvTot(fl))
-            m = m.updated(CommitLog.SumDvKey, (t, t))
+            dvAcc = Some(dvTot)
           }
-          fl -> m
-        }.toMap
+          base.copy(sums = sums, liveNonNull = nn, dvAcc = dvAcc)
+        }
       // a file whose harvest changes nothing (e.g. an overflowed —
       // unrepresentable — sum that stays absent) must not churn a
       // version per call: commit only actual restatements
-      val changed = restated.filter { case (fl, m) =>
-        m != s.stats.getOrElse(fl, Map.empty)
+      val changed = restated.filter { r =>
+        val e = s.entry(r.path)
+        r.rows.isDefined || (r.colStats, r.sums, r.liveNonNull, r.dvAcc) !=
+          (e.colStats, e.sums, e.liveNonNull, e.dvAcc)
       }
       if (changed.isEmpty) return (s.version, 0)
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, sch, None,
-            stats = changed)))
+      if (tryCommit(Manifest(s.version + 1, "add", entries = changed,
+          schema = Some(sch))))
         return (s.version + 1, changed.size)
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -971,8 +889,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
 
   def snapshot(): Snapshot = snapshotAt(Long.MaxValue)
 
-  private def emptySnapshot: Snapshot =
-    Snapshot(-1L, Nil, None, Map.empty, Map.empty, Map.empty)
+  private def emptySnapshot: Snapshot = Snapshot(-1L, None, Map.empty)
 
   /** The log's manifests up to version `asOf`, parsed lazily in
     * version order — the shared input of [[snapshotAt]] and
@@ -981,7 +898,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * a long-uncompacted log must not put every tree on the driver at
     * once — callers that need two passes materialize explicitly). */
   private def parsedManifests(asOf: Long, from: Long = Long.MinValue)
-      : Iterator[JsonNode] =
+      : Iterator[Manifest] =
     manifestStatuses(asOf, from).iterator.map(parseManifest)
 
   /** The published manifest files in [from, asOf], version order.
@@ -1004,160 +921,64 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   private def manifestVersionOf(st: org.apache.hadoop.fs.FileStatus): Long =
     st.getPath.getName.takeWhile(_ != '.').toLong
 
-  private def parseManifest(m: org.apache.hadoop.fs.FileStatus): JsonNode = {
-    val in = fs.open(m.getPath)
-    val raw = try {
-      val bytes = new Array[Byte](m.getLen.toInt)
-      in.readFully(bytes); new String(bytes, "UTF-8")
-    } finally in.close()
-    mapper.readTree(raw)
-  }
+  private def parseManifest(m: org.apache.hadoop.fs.FileStatus): Manifest =
+    ManifestCodec.read(fs, m.getPath)
 
-  /** Apply one manifest to a folded state. */
-  private def foldOne(prev: Snapshot, node: JsonNode): Snapshot = {
-    val version = node.get("version").asLong()
-    val fl = node.get("files").elements().asScala.map(_.asText()).toVector
-    val filePartTags: Map[String, String] =
-      Option(node.get("fileParts")).map(_.properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty)
-    val fileStatTags = parseStats(node)
-    val fileBloomTags = parseBlooms(node)
-    val fileDvTags = parseDvs(node)
-    val fileRowTags = parseRows(node)
-    val fileNullTags = parseNulls(node)
-    // r18: the spec REGISTRY is a full restatement when present
-    // (evolve_spec and checkpoints write it); absent = carry forward,
-    // so pre-r18 manifests and single-spec commits stay byte-identical
-    var specs = Option(node.get("partSpecs"))
-      .map(_.elements().asScala.map(_.asText()).toVector)
-      .getOrElse(prev.specs)
-    val explicitSpecIds: Map[String, Int] =
-      Option(node.get("fileSpecs")).map(_.properties().asScala
-        .map(e => e.getKey -> e.getValue.asInt()).toMap).getOrElse(Map.empty)
+  /** Apply one manifest to a folded state: the action decides which
+    * live entries survive, the manifest's files join, and what it
+    * states about a live file folds onto that file's entry. */
+  private def foldOne(prev: Snapshot, m: Manifest): Snapshot = {
+    // the spec REGISTRY is a full restatement when present (evolve_spec
+    // and checkpoints write it); absent = carry forward
+    val specs = m.specs.getOrElse(prev.specs)
+    val curId = math.max(0, specs.size - 1)
     // a newly tagged file's spec: explicit entry (restore/checkpoint
     // restatements) > the id it already carried (files riding through
-    // a replace — absent from prev.fileSpec means the CREATE-TIME spec
-    // 0, the same reading specIdOf gives, NOT the current one: a CoW
-    // rewrite on an evolved-but-unmigrated table must not silently
-    // promote stale files it merely carried) > the CURRENT spec for
-    // genuinely new files (all writes land under the current spec —
-    // [[requireCurrentSpec]] enforces it)
-    val curId = math.max(0, specs.size - 1)
-    lazy val prevFileSet = prev.files.toSet
-    def specIdsFor(tagged: Map[String, String],
-        carried: Map[String, Int]): Map[String, Int] =
-      if (specs.isEmpty) Map.empty
-      else tagged.keysIterator.map(f => f -> explicitSpecIds.getOrElse(f,
-        if (prevFileSet(f)) carried.getOrElse(f, 0) else curId)).toMap
-    var files = prev.files
-    var parts = prev.parts
-    var stats = prev.stats
-    var blooms = prev.blooms
-    var dvs = prev.dvs
-    var rows = prev.rows
-    var nulls = prev.nulls
-    var fileSpec = prev.fileSpec
-    node.get("action").asText() match {
-      case "add"     =>
-        files = files ++ fl; parts = parts ++ filePartTags
-        stats = stats ++ fileStatTags; blooms = blooms ++ fileBloomTags
-        rows = rows ++ fileRowTags; nulls = nulls ++ fileNullTags
-        fileSpec = fileSpec ++ specIdsFor(filePartTags, prev.fileSpec)
-        // ordinary appends carry no DVs; a shallow clone's version-0
-        // "add" restates the source's, absolute like its files
-        fileDvTags.foreach { case (f, refs) =>
-          dvs = dvs.updated(f, dvs.getOrElse(f, Nil) ++ refs)
-        }
-      case "add_dv"  =>
-        // merge-on-read DML: each named data file gains one more DV
-        // sidecar masking additional row positions; an UPDATE's commit
-        // also ADOPTS the replacement files it appended (atomically
-        // with the mask — `files` is empty on a pure delete)
-        files = files ++ fl; parts = parts ++ filePartTags
-        stats = stats ++ fileStatTags; blooms = blooms ++ fileBloomTags
-        rows = rows ++ fileRowTags; nulls = nulls ++ fileNullTags
-        fileSpec = fileSpec ++ specIdsFor(filePartTags, prev.fileSpec)
-        fileDvTags.foreach { case (f, refs) =>
-          dvs = dvs.updated(f, dvs.getOrElse(f, Nil) ++ refs)
-        }
-      case "replace" =>
-        files = fl; parts = filePartTags; stats = fileStatTags
-        blooms = fileBloomTags; rows = fileRowTags; nulls = fileNullTags
-        // a file riding through the replace keeps the spec id it had;
-        // fresh files stamp current (explicit entries override both)
-        fileSpec = specIdsFor(filePartTags, prev.fileSpec)
-        // restatement (checkpoint/restore/rewrites carrying untouched
-        // files' DVs through); absent = no DVs survive the replace
-        dvs = fileDvTags
+    // a replace — NOT the current one: a CoW rewrite on an evolved-but-
+    // unmigrated table must not silently promote stale files it merely
+    // carried) > the CURRENT spec for genuinely new files (all writes
+    // land under the current spec — [[requireCurrentSpec]] enforces it)
+    def specIdFor(f: String): Int =
+      if (specs.isEmpty) 0
+      else m.specIds.getOrElse(f, prev.entries.get(f).fold(curId)(_.specId))
+    var live = m.action match {
+      // merge-on-read DML (`add_dv`) also adopts its replacement files
+      case "add" | "add_dv" => prev.entries
+      // restatement: checkpoint/restore/rewrites carry what survives
+      case "replace" => VectorMap.empty[String, FileEntry]
       case "replace_parts" =>
-        // retire the live files OF THE NAMED PARTITIONS, keep the
-        // rest; untagged files are untouched (the writer enforces
-        // all-tagged before using this action)
-        val retired = Option(node.get("parts")).map(_.elements().asScala
-          .map(_.asText()).toSet).getOrElse(Set.empty[String])
-        files = files.filterNot(f => parts.get(f).exists(retired)) ++ fl
-        stats = stats.filterNot { case (f, _) => parts.get(f).exists(retired) } ++ fileStatTags
-        blooms = blooms.filterNot { case (f, _) => parts.get(f).exists(retired) } ++ fileBloomTags
-        dvs = dvs.filterNot { case (f, _) => parts.get(f).exists(retired) } ++ fileDvTags
-        rows = rows.filterNot { case (f, _) => parts.get(f).exists(retired) } ++ fileRowTags
-        nulls = nulls.filterNot { case (f, _) => parts.get(f).exists(retired) } ++ fileNullTags
-        fileSpec = fileSpec.filterNot { case (f, _) => parts.get(f).exists(retired) } ++
-          specIdsFor(filePartTags, prev.fileSpec)
-        parts = parts.filterNot { case (f, p) => retired(p) } ++ filePartTags
+        // retire the live files OF THE NAMED PARTITIONS, keep the rest;
+        // untagged files are untouched (the writer enforces all-tagged
+        // before using this action)
+        val retired = m.retiredParts.toSet
+        prev.entries.filterNot(_._2.partTag.exists(retired))
       case "evolve_spec" =>
-        // metadata-only: the registry (restated above) grew by one;
-        // no file moves, every existing file keeps its id
+        // metadata-only: the registry (restated above) grew by one
         require(specs.nonEmpty,
-          s"$tableRoot: evolve_spec manifest at version $version carries no partSpecs")
+          s"$tableRoot: evolve_spec manifest at version ${m.version} carries no partSpecs")
+        prev.entries
       case other => throw new IllegalStateException(
-        s"$tableRoot: unknown log action '$other' at version $version")
+        s"$tableRoot: unknown log action '$other' at version ${m.version}")
     }
-    var schema = prev.schema
+    m.files.foreach(f => if (!live.contains(f)) live = live.updated(f, FileEntry(f)))
+    m.entries.foreach(e => live.get(e.path).foreach { cur =>
+      live = live.updated(e.path,
+        cur.restate(e, if (e.partTag.isDefined) specIdFor(e.path) else cur.specId))
+    })
     var txns = prev.txns
-    Option(node.get("schema")).foreach(s =>
-      schema = Some(DataType.fromJson(s.asText()).asInstanceOf[StructType]))
-    // full restatement when present (dropColumn and compact write it);
-    // absent = carry forward, so ordinary commits stay byte-identical
-    val physRetired = Option(node.get("physRetired"))
-      .map(_.elements().asScala.map(_.asText()).toVector)
-      .getOrElse(prev.physRetired)
-    Option(node.get("txn")).foreach { t =>
-      val id = t.get("id").asText()
-      val epoch = t.get("epoch").asLong()
+    m.txn.foreach { case (id, epoch) =>
       txns = txns.updated(id, math.max(epoch, txns.getOrElse(id, Long.MinValue)))
     }
     // a checkpoint manifest carries the FULL folded txn table, so the
     // fold stays correct when pre-checkpoint manifests are pruned
-    Option(node.get("txns")).foreach(_.properties().asScala.foreach { e =>
-      txns = txns.updated(e.getKey,
-        math.max(e.getValue.asLong(), txns.getOrElse(e.getKey, Long.MinValue)))
-    })
-    Snapshot(version, files, schema, txns, parts, stats, blooms, physRetired,
-      dvs, rows, nulls, specs, fileSpec)
+    m.txns.foreach { case (id, epoch) =>
+      txns = txns.updated(id, math.max(epoch, txns.getOrElse(id, Long.MinValue)))
+    }
+    // physRetired: full restatement when present (dropColumn and
+    // compact write it); absent = carry forward
+    Snapshot(m.version, m.schema.orElse(prev.schema), txns,
+      m.physRetired.getOrElse(prev.physRetired), specs, live)
   }
-
-  /** Parse a manifest's `fileRows` node: data file → exact physical
-    * row count (r14; absent on pre-r14 manifests). */
-  private def parseRows(node: JsonNode): Map[String, Long] =
-    Option(node.get("fileRows")).map(_.properties().asScala.map { e =>
-      e.getKey -> e.getValue.asLong()
-    }.toMap).getOrElse(Map.empty)
-
-  /** Parse a manifest's `fileNulls` node: data file → per-physical-
-    * column exact null counts (r14). */
-  private def parseNulls(node: JsonNode): Map[String, Map[String, Long]] =
-    Option(node.get("fileNulls")).map(_.properties().asScala.map { e =>
-      e.getKey -> e.getValue.properties().asScala.map { ce =>
-        ce.getKey -> ce.getValue.asLong()
-      }.toMap
-    }.toMap).getOrElse(Map.empty)
-
-  /** Parse a manifest's `fileDvs` node: data file → ordered DV refs. */
-  private def parseDvs(node: JsonNode): Map[String, Seq[CommitLog.DvRef]] =
-    Option(node.get("fileDvs")).map(_.properties().asScala.map { e =>
-      e.getKey -> e.getValue.elements().asScala.map(r =>
-        CommitLog.DvRef(r.get("p").asText(), r.get("n").asLong())).toSeq
-    }.toMap).getOrElse(Map.empty)
 
   /** The log folded up to version `asOf` (inclusive) — TIME TRAVEL.
     * Versions older than the last [[prune]]d checkpoint are gone (the
@@ -1190,7 +1011,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         val from = checkpointFoldStart(asOf)
         statuses.filter(st => manifestVersionOf(st) >= from)
     }
-    val seed = seedEntry.map(_.snap.asInstanceOf[Snapshot]).getOrElse(emptySnapshot)
+    val seed = seedEntry.map(_.snap).getOrElse(emptySnapshot)
     if (toFold.isEmpty) return seed
     val folded = toFold.iterator.map(parseManifest).foldLeft(seed)(foldOne)
     if (CommitLog.snapCache.size > 512) CommitLog.snapCache.clear() // crude bound
@@ -1215,26 +1036,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val p = new Path(logDir, "_last_checkpoint")
     try {
       if (!fs.exists(p)) return Long.MinValue
-      val in = fs.open(p)
-      val raw = try {
-        val st = fs.getFileStatus(p)
-        val bytes = new Array[Byte](st.getLen.toInt)
-        in.readFully(bytes); new String(bytes, "UTF-8")
-      } finally in.close()
-      val v = mapper.readTree(raw).get("version").asLong()
+      val v = ManifestCodec.hintVersion(fs, p)
       if (v > asOf) return Long.MinValue
       // trust-but-verify: the named manifest must exist and BE a
       // checkpoint, or the fold would start from partial state
       val mp = manifestPath(v)
-      if (!fs.exists(mp)) return Long.MinValue
-      val min = fs.open(mp)
-      val mraw = try {
-        val st = fs.getFileStatus(mp)
-        val bytes = new Array[Byte](st.getLen.toInt)
-        min.readFully(bytes); new String(bytes, "UTF-8")
-      } finally min.close()
-      if (Option(mapper.readTree(mraw).get("checkpoint")).exists(_.asBoolean()))
-        v
+      if (fs.exists(mp) && ManifestCodec.read(fs, mp).checkpoint) v
       else Long.MinValue
     } catch { case _: Exception => Long.MinValue }
   }
@@ -1246,14 +1053,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * Driver-built and manifest-count-sized by construction — [[prune]]
     * bounds it. */
   def history(): DataFrame = {
-    val rows = parsedManifests(Long.MaxValue).map { node =>
-      (node.get("version").asLong(),
-        Option(node.get("ts")).map(_.asLong()),
-        node.get("action").asText(),
-        Option(node.get("checkpoint")).exists(_.asBoolean()),
-        node.get("files").size().toLong,
-        Option(node.get("txn")).map(_.get("id").asText()),
-        Option(node.get("txn")).map(_.get("epoch").asLong()))
+    val rows = parsedManifests(Long.MaxValue).map { m =>
+      (m.version, m.ts, m.action, m.checkpoint, m.files.size.toLong,
+        m.txn.map(_._1), m.txn.map(_._2))
     }.toSeq.sortBy(-_._1)
     val sp = spark
     import sp.implicits._
@@ -1279,9 +1081,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * clock-skew rule. */
   def versionAtTime(tsMillis: Long): Long = {
     var chosen = -1L
-    parsedManifests(Long.MaxValue).foreach { node =>
-      val ts = Option(node.get("ts")).map(_.asLong()).getOrElse(0L)
-      if (ts <= tsMillis) chosen = node.get("version").asLong()
+    parsedManifests(Long.MaxValue).foreach { m =>
+      if (m.ts.getOrElse(0L) <= tsMillis) chosen = m.version
     }
     require(chosen >= 0,
       s"$tableRoot: no retained version committed at or before $tsMillis")
@@ -1303,7 +1104,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   }
 
   private def readAt(s: Snapshot): DataFrame = s.schema match {
-    case Some(sch) => readFiles(sch, s.files, s.dvs)
+    case Some(sch) => readFiles(sch, s.files, s.dvsOf)
     case None =>
       if (s.files.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1354,12 +1155,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         && f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]))
     def wrap(v: Any): Any = if (isDec) wrapDec(v) else wrapTs(v)
     val picked = s.files.filter { f =>
-      s.stats.get(f).flatMap(_.get(physCol)) match {
+      s.entry(f).colStats.get(physCol) match {
         case Some((mn, mx)) => overlaps(mn, mx, wrap(lo), wrap(hi))
         case None => true // no stats → cannot rule the file out
       }
     }
-    val base = readFiles(s.schema.getOrElse(new StructType()), picked, s.dvs)
+    val base = readFiles(s.schema.getOrElse(new StructType()), picked, s.dvsOf)
     base.filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
@@ -1381,7 +1182,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], new StructType())
     val picked = pointCandidateFiles(s, colName, value)
-    val base = readFiles(s.schema.getOrElse(new StructType()), picked, s.dvs)
+    val base = readFiles(s.schema.getOrElse(new StructType()), picked, s.dvsOf)
     base.filter(col(colName) === lit(value))
   }
 
@@ -1439,11 +1240,11 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       case _ => value
     }
     s.files.filter { f =>
-      val statOk = s.stats.get(f).flatMap(_.get(physCol)) match {
+      val statOk = s.entry(f).colStats.get(physCol) match {
         case Some((mn, mx)) => overlaps(mn, mx, tsPoint, tsPoint)
         case None => true
       }
-      val bloomOk = (s.blooms.get(f).flatMap(_.get(physCol)), vs) match {
+      val bloomOk = (s.entry(f).blooms.get(physCol), vs) match {
         case (Some(b), Some(v)) if b.era == era => bloomMayContain(b, v)
         case _ => true // no filter, wrong era, or unprobable value → keep
       }
@@ -1451,7 +1252,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     }
   }
 
-  /** Driver-side probe with exactly the positions [[bloomsFor]] sets:
+  /** Driver-side probe with exactly the positions [[bloomsForCfg]] sets:
     * position j = parseLong(md5("j:" + string-form)[0,15), 16) mod bits
     * (60-bit prefix — always positive, same arithmetic as the Spark
     * side's conv/pmod). */
@@ -1470,10 +1271,6 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * values hash to k md5-derived positions (q94's relational bloom,
     * parameterized), bit_or'd into 64-bit words per (file, column).
     * The collect is bounded by files × cols × bits/64 longs. */
-  private def bloomsFor(relPaths: Seq[String],
-      sch: Option[StructType] = None): Map[String, Map[String, CommitLog.BloomF]] =
-    bloomsForCfg(relPaths, effectiveBloomCfg(), sch)
-
   /** The bloom config in EFFECT for this table: the instance's writer
     * config, else derived from the live snapshot's self-describing
     * filters. [[optimize]] has kept an existing index alive from a
@@ -1484,7 +1281,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   private def effectiveBloomCfg(): Option[(Seq[String], Int, Int)] =
     bloomCfg.orElse {
       val s = snapshot()
-      val bl = s.blooms
+      val bl = s.entries.valuesIterator.map(_.blooms).filter(_.nonEmpty).toSeq
       if (bl.isEmpty) None
       else {
         // filter keys are PHYSICAL names; express the derived config in
@@ -1499,13 +1296,17 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         val logByPhys: Map[String, String] = s.schema
           .map(_.fields.map(f => lc(physName(f)) -> f.name).toMap)
           .getOrElse(Map.empty)
-        val cols = bl.values.flatMap(_.keys).toSeq.distinct
+        val cols = bl.flatMap(_.keys).distinct
           .map(c => logByPhys.getOrElse(lc(c), c)).distinct.sorted
-        val rep = bl.values.head.values.head
+        val rep = bl.head.values.head
         Some((cols, rep.bits, rep.k))
       }
     }
 
+  /** One job over the just-written files: every indexed column's
+    * values hash to k md5-derived positions (q94's relational bloom,
+    * parameterized), bit_or'd into 64-bit words per (file, column).
+    * The collect is bounded by files × cols × bits/64 longs. */
   private def bloomsForCfg(relPaths: Seq[String],
       cfg: Option[(Seq[String], Int, Int)],
       sch: Option[StructType] = None): Map[String, Map[String, CommitLog.BloomF]] =
@@ -1619,7 +1420,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     import org.apache.spark.sql.functions.{col, lit}
     val ms = parsedManifests(toVersion).toVector // two passes below
     require(fromVersion == -1L
-        || ms.exists(_.get("version").asLong() == fromVersion),
+        || ms.exists(_.version == fromVersion),
       s"$tableRoot: version $fromVersion is not retained in the log — " +
         "changes can only be read from a version the manifest fold still reaches")
     // renames between versions: every piece is normalized to the FEED-
@@ -1690,9 +1491,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       }
     var cur = emptySnapshot
     val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    ms.foreach { node =>
+    ms.foreach { m =>
       val prev = cur
-      cur = foldOne(cur, node)
+      cur = foldOne(cur, m)
       if (cur.version > fromVersion) {
         val prevSet = prev.files.toSet
         val curSet = cur.files.toSet
@@ -1707,22 +1508,21 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             sch)
         }
         def piece(fls: Seq[String], schema: Option[StructType], typ: String,
-            dvs: Map[String, Seq[CommitLog.DvRef]]): DataFrame =
+            dvs: String => Seq[CommitLog.DvRef]): DataFrame =
           stamp(readFiles(schema.getOrElse(new StructType()), fls, dvs),
             schema, typ)
         // a retired file's delete rows are its rows AS THE CONSUMER SAW
         // THEM at prev — net of the deletion vectors it carried (their
         // masked rows were already emitted as deletes when masked)
         if (removed.nonEmpty)
-          pieces += piece(removed, prev.schema, "delete", prev.dvs)
+          pieces += piece(removed, prev.schema, "delete", prev.dvsOf)
         // merge-on-read deletes: rows newly masked this commit on files
         // that stay live — emitted by reading ONLY the new DV positions
-        val dvNew: Map[String, Seq[CommitLog.DvRef]] = cur.dvs.flatMap {
-          case (f, refs) if curSet(f) =>
-            val fresh = refs.drop(prev.dvs.getOrElse(f, Nil).size)
-            if (fresh.isEmpty) None else Some(f -> fresh)
-          case _ => None
-        }
+        val dvNew: Map[String, Seq[CommitLog.DvRef]] = cur.entries.valuesIterator
+          .flatMap { e =>
+            val fresh = e.dvs.drop(prev.dvsOf(e.path).size)
+            if (fresh.isEmpty) None else Some(e.path -> fresh)
+          }.toMap
         // r18 CDC ROW LINEAGE (opt-in): an `add_dv` commit that both
         // masks rows and appends files is a merge-on-read UPDATE — its
         // replacement files carry each pre-image's stable row id in the
@@ -1732,7 +1532,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         // (plain inserts, pure deletes, copy-on-write rewrites) keeps
         // the delete+insert form — the provable-link contract.
         val provableUpdate = lineage &&
-          node.get("action").asText() == "add_dv" &&
+          m.action == "add_dv" &&
           added.nonEmpty && dvNew.nonEmpty &&
           cur.schema.forall(lineageNameFree)
         if (provableUpdate) {
@@ -1744,7 +1544,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           // falls out of the carrier's nullness (an update's
           // postimage vs an insert-clause row) — no second filtered
           // re-read of the appended parquet (review r18)
-          val raw = readFiles(ext, added, Map.empty)
+          val raw = readFiles(ext, added)
           pieces += normalize(raw
               .withColumn("_change_type",
                 when(col(CommitLog.RowLineageCol).isNotNull,
@@ -1768,7 +1568,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             sch)
         } else {
           if (added.nonEmpty)
-            pieces += piece(added, cur.schema, "insert", Map.empty)
+            pieces += piece(added, cur.schema, "insert", _ => Nil)
           if (dvNew.nonEmpty)
             pieces += stamp(
               selectDvRows(cur.schema.getOrElse(new StructType()), dvNew,
@@ -2053,12 +1853,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     // including stats/bloom harvesting over the new files — must not
     // leak the already-written data files.
     try {
-      val st = statsFor(files, s0)
-      val bl = bloomsFor(files, Some(sch0))
-      while (!tryCommit(cur.version + 1,
-          manifestJson(cur.version + 1, "add", files,
-            reassignChecked(cur, df, sch0),
-            txn, stats = st, blooms = bl))) {
+      val es = entriesFor(files, s0, Some(sch0))
+      while (!tryCommit(Manifest(cur.version + 1, "add", files, es,
+          Some(reassignChecked(cur, df, sch0)), txn))) {
         attempts += 1
         require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         val s = snapshot()
@@ -2096,9 +1893,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           case CommitLog.LastWins       => Upsert.lastWins(target, in, keys)
         }
       val files = writeData(merged, sch)
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace", files, sch, txn,
-            stats = statsFor(files, s), blooms = bloomsFor(files, Some(sch))))
+      val won = try tryCommit(Manifest(s.version + 1, "replace", files,
+          entriesFor(files, s, Some(sch)), Some(sch), txn))
         catch { case e: Throwable => files.foreach(deleteData); throw e }
       if (won) return s.version + 1
       // lost the race: our rewrite is stale (it merged against an old
@@ -2161,7 +1957,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     while (true) {
       val s = snapshot()
       if (replayOf(s, txn)) return s.version
-      val untagged = s.files.filterNot(s.parts.contains)
+      val untagged = s.files.filter(s.entry(_).partTag.isEmpty)
       require(untagged.isEmpty,
         s"$tableRoot: ${untagged.size} live files carry no partition tag " +
           s"(e.g. ${untagged.headOption.getOrElse("")}) — a partitioned merge " +
@@ -2172,9 +1968,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       val sch = assignPhys(mergedSchema(s.schema, incoming.schema),
         s.schema, s.physRetired)
       val in = conform(incoming, sch)
-      val touchedFiles = s.files.filter(f => s.parts.get(f).exists(touched.contains))
+      val touchedFiles = s.files.filter(f => s.entry(f).partTag.exists(touched.contains))
       val target = conform(
-        readFiles(s.schema.getOrElse(incoming.schema), touchedFiles, s.dvs), sch)
+        readFiles(s.schema.getOrElse(incoming.schema), touchedFiles, s.dvsOf), sch)
       val merged =
         if (s.version < 0) in
         else mode match {
@@ -2185,11 +1981,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       // once (no per-partition filtered re-reads, no checkpoint to
       // leak on a lost race — VERDICT r7 / ADVICE r7)
       val tagged = writeDataPartitioned(merged, partCol, sch)
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace_parts", tagged.map(_._1), sch,
-            txn, parts = touched, fileParts = tagged.toMap,
-            stats = statsFor(tagged.map(_._1), s),
-            blooms = bloomsFor(tagged.map(_._1), Some(sch))))
+      val won = try tryCommit(Manifest(s.version + 1, "replace_parts",
+          tagged.map(_._1), entriesFor(tagged.map(_._1), s, Some(sch), tagged.toMap),
+          Some(sch), txn, retiredParts = touched))
         catch { case e: Throwable => tagged.foreach(t => deleteData(t._1)); throw e }
       if (won) return s.version + 1
       tagged.foreach(t => deleteData(t._1))
@@ -2218,12 +2012,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     var cur = s0
     var attempts = 0
     try {
-      val st = statsFor(tagged.map(_._1), s0)
-      val bl = bloomsFor(tagged.map(_._1), Some(sch0))
-      while (!tryCommit(cur.version + 1,
-          manifestJson(cur.version + 1, "add", tagged.map(_._1),
-            reassignChecked(cur, df, sch0),
-            txn, fileParts = tagged.toMap, stats = st, blooms = bl))) {
+      val es = entriesFor(tagged.map(_._1), s0, Some(sch0), tagged.toMap)
+      while (!tryCommit(Manifest(cur.version + 1, "add", tagged.map(_._1), es,
+          Some(reassignChecked(cur, df, sch0)), txn))) {
         attempts += 1
         require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         val s = snapshot()
@@ -2244,8 +2035,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val s = snapshot()
     requireSingleSpec(s, "readPartitions")
     val want = values.toSet
-    val picked = s.files.filter(f => s.parts.get(f).exists(want))
-    readFiles(s.schema.getOrElse(new StructType()), picked, s.dvs)
+    val picked = s.files.filter(f => s.entry(f).partTag.exists(want))
+    readFiles(s.schema.getOrElse(new StructType()), picked, s.dvsOf)
   }
 
   /** DYNAMIC partition overwrite: replace exactly the partitions
@@ -2261,7 +2052,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     while (true) {
       val s = snapshot()
       if (replayOf(s, txn)) return s.version
-      val untagged = s.files.filterNot(s.parts.contains)
+      val untagged = s.files.filter(s.entry(_).partTag.isEmpty)
       require(untagged.isEmpty,
         s"$tableRoot: ${untagged.size} live files carry no partition tag — " +
           "a partition-scoped overwrite cannot retire their rows; use " +
@@ -2272,11 +2063,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         s.schema, s.physRetired)
       val tagged = writeDataPartitioned(conform(df, sch), partCol, sch)
       val parts = tagged.map(_._2).distinct.sorted
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace_parts", tagged.map(_._1), sch,
-            txn, parts = parts, fileParts = tagged.toMap,
-            stats = statsFor(tagged.map(_._1), s),
-            blooms = bloomsFor(tagged.map(_._1), Some(sch))))
+      val won = try tryCommit(Manifest(s.version + 1, "replace_parts",
+          tagged.map(_._1), entriesFor(tagged.map(_._1), s, Some(sch), tagged.toMap),
+          Some(sch), txn, retiredParts = parts))
         catch { case e: Throwable => tagged.foreach(t => deleteData(t._1)); throw e }
       if (won) return s.version + 1
       tagged.foreach(t => deleteData(t._1))
@@ -2300,10 +2089,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     var v = s0.version + 1
     var attempts = 0
     try {
-      val st = statsFor(tagged.map(_._1), s0)
-      val bl = bloomsFor(tagged.map(_._1), Some(df.schema))
-      while (!tryCommit(v, manifestJson(v, "replace", tagged.map(_._1),
-          df.schema, txn, fileParts = tagged.toMap, stats = st, blooms = bl))) {
+      val es = entriesFor(tagged.map(_._1), s0, Some(df.schema), tagged.toMap)
+      while (!tryCommit(Manifest(v, "replace", tagged.map(_._1), es,
+          Some(df.schema), txn))) {
         attempts += 1
         require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         val s = snapshot()
@@ -2364,14 +2152,14 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         // claims to describe: an arity mismatch is a certain lie
         // (same-arity misdeclarations remain the caller's contract,
         // as documented). ADVICE r18.
-        val sample = s.parts.valuesIterator.take(16).toSeq
+        val sample = s.entries.valuesIterator.flatMap(_.partTag).take(16).toSeq
         require(sample.isEmpty || sample.exists(t =>
             scala.util.Try(fromSpec.decode(t)).isSuccess),
           s"$tableRoot: no existing partition tag decodes under the " +
             s"declared current spec '${fromSpec.render}' — declare the " +
             "spec the existing tags were actually written under")
       }
-      val untagged = s.files.filterNot(s.parts.contains)
+      val untagged = s.files.filter(s.entry(_).partTag.isEmpty)
       require(untagged.isEmpty,
         s"$tableRoot: ${untagged.size} live file(s) carry no partition " +
           "tag — spec evolution needs a consistently partition-tagged " +
@@ -2379,9 +2167,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       val registry =
         if (s.specs.isEmpty) Seq(fromSpec.render, toSpec.render)
         else s.specs :+ toSpec.render
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "evolve_spec", Nil, sch, None,
-            partSpecs = Some(registry))))
+      if (tryCommit(Manifest(s.version + 1, "evolve_spec", schema = Some(sch),
+          specs = Some(registry))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2406,11 +2193,11 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       if (s.specs.isEmpty) return (s.version, 0)
       val cur = s.currentSpecId
       val stale = s.files.filter(f =>
-        s.parts.contains(f) && s.specIdOf(f) != cur)
+        s.entry(f).partTag.isDefined && s.entry(f).specId != cur)
       if (stale.isEmpty) return (s.version, 0)
       val sch = s.schema.getOrElse(throw new IllegalStateException(
         s"$tableRoot: committed version ${s.version} carries no schema"))
-      val rewritten = readFiles(sch, stale, s.dvs)
+      val rewritten = readFiles(sch, stale, s.dvsOf)
       commitRewrite(s, sch, stale, rewritten, Some(s.specs.last), txn) match {
         case Some(_) => return (s.version + 1, stale.size)
         case None =>
@@ -2464,7 +2251,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     if (s.specs.nonEmpty) {
       val cur = s.currentSpecId
       val stale = s.files.filter(f =>
-        s.parts.contains(f) && s.specIdOf(f) != cur)
+        s.entry(f).partTag.isDefined && s.entry(f).specId != cur)
       require(stale.isEmpty,
         s"$tableRoot: $op is partition-scoped and ${stale.size} live " +
           s"file(s) still carry tags under an older partition spec " +
@@ -2493,8 +2280,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       val evolved = assignPhys(
         mergedSchema(Some(cur).filter(_.nonEmpty), StructType(cols.toArray)),
         Some(cur).filter(_.nonEmpty), s.physRetired)
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, evolved, None)))
+      if (tryCommit(Manifest(s.version + 1, "add", schema = Some(evolved))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2575,8 +2361,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       // physical name
       val evolved = assignPhys(addAt(cur, parentPath, ""), s.schema,
         s.physRetired)
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, evolved, None)))
+      if (tryCommit(Manifest(s.version + 1, "add", schema = Some(evolved))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2628,8 +2413,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             .withMetadata(f.metadata)
             .putString(CommitLog.PhysKey, physName(f)).build())))
       }
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, evolved, None)))
+      if (tryCommit(Manifest(s.version + 1, "add", schema = Some(evolved))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2790,9 +2574,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       }
       val retiredPath = physPathOf(cur, path)
       val retired = s.physRetired :+ retiredPath
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, evolved, None,
-            physRetired = Some(retired))))
+      if (tryCommit(Manifest(s.version + 1, "add", schema = Some(evolved),
+          physRetired = Some(retired))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2890,8 +2673,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         }
       }
       if (noop) return s.version
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "add", Nil, evolved, None)))
+      if (tryCommit(Manifest(s.version + 1, "add", schema = Some(evolved))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -2951,11 +2733,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         case None => (writeData(df, clean), Map.empty[String, String])
       }
       val cfg = effectiveBloomCfg()
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace", files, clean, None,
-            fileParts = tags, stats = statsFor(files, s),
-            blooms = bloomsForCfg(files, cfg, Some(clean)),
-            physRetired = Some(Nil)))
+      val won = try tryCommit(Manifest(s.version + 1, "replace", files,
+          entriesFor(files, s, Some(clean), tags, cfg), Some(clean),
+          physRetired = Some(Nil)))
         catch { case e: Throwable => files.foreach(deleteData); throw e }
       if (won) return s.version + 1
       files.foreach(deleteData)
@@ -2973,10 +2753,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     var v = s0.version + 1
     var attempts = 0
     try {
-      val st = statsFor(files, s0)
-      val bl = bloomsFor(files, Some(df.schema))
-      while (!tryCommit(v, manifestJson(v, "replace", files, df.schema, txn,
-          stats = st, blooms = bl))) {
+      val es = entriesFor(files, s0, Some(df.schema))
+      while (!tryCommit(Manifest(v, "replace", files, es, Some(df.schema), txn))) {
         attempts += 1
         require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         val s = snapshot()
@@ -2996,7 +2774,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * table rewrites only the files it must (Delta's two-phase DELETE
     * shape, driven by this log's own manifest stats):
     *
-    *   1. CANDIDATES — manifest file stats ([[statsFor]]) rule out
+    *   1. CANDIDATES — manifest file stats ([[entriesFor]]) rule out
     *      files that cannot hold a TRUE row before ANY file opens:
     *      each top-level conjunct of the shape `col <op> literal`
     *      contributes a bound, and a file whose recorded (min, max)
@@ -3037,7 +2815,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           attempts += 1
           require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         case None => // policy says copy-on-write
-          val kept = readFiles(sch, touched, s.dvs)
+          val kept = readFiles(sch, touched, s.dvsOf)
             .filter(not(coalesce(condition, lit(false))))
           commitRewrite(s, sch, touched, kept, partCol, txn) match {
             case Some(v) => return v
@@ -3108,9 +2886,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       : Seq[(String, String)] = {
     if (!spark.conf.getOption("spark.graft.dv.sumDeltas.enabled")
         .forall(_.toBoolean)) return Nil
-    val phys = touched.flatMap(f => s.stats.getOrElse(f, Map.empty).keysIterator
-        .filter(_.startsWith(CommitLog.SumKeyPrefix)))
-      .map(_.drop(CommitLog.SumKeyPrefix.length)).distinct
+    val phys = touched.flatMap(s.entry(_).sums.keys).distinct
     if (phys.isEmpty) return Nil
     val logByPhys: Map[String, String] = s.schema
       .map(_.fields.map(f => lc(physName(f)) -> f.name).toMap)
@@ -3152,10 +2928,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * (r17, VERDICT r16 #1): the masked rows are already materialized
     * by the DV collect, so each touched file's exact sum partials are
     * reduced by its masked rows' contributions, a live non-null count
-    * per column lands under [[CommitLog.SumNPrefix]], and
-    * [[CommitLog.SumDvKey]] records the cumulative masked total the
-    * entries now exclude — the fold admits the file's sum evidence iff
-    * that equals its DV cardinality. Honest-refusal preservation:
+    * per column lands in `liveNonNull`, and `dvAcc` records the
+    * cumulative masked total the entry now excludes — the fold admits
+    * the file's sum evidence iff that equals its DV cardinality. Honest-refusal preservation:
     *  - a file with a PRIOR unaccounted DV cannot be accounted (the
     *    earlier masked values are gone) — no restatement, keeps
     *    refusing;
@@ -3169,7 +2944,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
   private def dvSumRestated(s: Snapshot, touched: Seq[String],
       acct: DvAcct,
       masked: Iterable[org.apache.spark.sql.Row])
-      : Map[String, Map[String, (Any, Any)]] = {
+      : Map[String, FileEntry] = {
     val sumCols = acct.sums
     if (acct.isEmpty || masked.isEmpty) return Map.empty
     def toBig(v: Any): java.math.BigDecimal = v match {
@@ -3186,37 +2961,23 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val keepNnPhys = keepSumPhys ++ acct.extras.map(c => lc(c._1))
     masked.groupBy(_.getString(0)).flatMap { case (base, rows) =>
       relByBase.get(base).flatMap { rel =>
-        val prevDv = s.dvs.getOrElse(rel, Nil).iterator.map(_.count).sum
-        val st = s.stats.getOrElse(rel, Map.empty)
-        val accounted = prevDv == 0L ||
-          st.get(CommitLog.SumDvKey).exists {
-            case (n: Long, _) => n == prevDv
-            case _ => false
-          }
-        if (!accounted) None // a legacy DV: its masked values are gone
+        val e = s.entry(rel)
+        val prevDv = e.maskedCount
+        if (prevDv != 0L && !e.dvAccounted)
+          None // a legacy DV: its masked values are gone
         else {
           // sweep stale entries of dropped columns (no live logical)
-          var m = st.filterNot { case (k, _) =>
-            (k.startsWith(CommitLog.SumKeyPrefix)
-                && !keepSumPhys(lc(k.drop(CommitLog.SumKeyPrefix.length)))) ||
-            (k.startsWith(CommitLog.SumNPrefix)
-                && !keepNnPhys(lc(k.drop(CommitLog.SumNPrefix.length))))
-          }
+          var sums = e.sums.filter(kv => keepSumPhys(lc(kv._1)))
+          var nn = e.liveNonNull.filter(kv => keepNnPhys(lc(kv._1)))
           // the live non-null count's prior value: the maintained entry
           // if present, else — only while the file has NO accounted
           // prior DV — the pre-mask rows−nulls (after a prior DV that
           // figure overcounts by previously-masked non-null rows:
           // absence refuses, ADVICE r17)
-          def prevNnOf(nKey: String, phys: String): Option[Long] =
-            m.get(nKey) match {
-              case Some((n: Long, _)) => Some(n)
-              case _ if prevDv == 0L => (s.rows.get(rel),
-                  s.nulls.get(rel).flatMap(_.get(phys))) match {
-                case (Some(r), Some(nl)) => Some(r - nl)
-                case _ => None
-              }
-              case _ => None
-            }
+          def prevNnOf(phys: String): Option[Long] =
+            nn.get(phys).orElse(
+              if (prevDv != 0L) None
+              else for (r <- e.rows; nl <- e.nulls.get(phys)) yield r - nl)
           sumCols.zipWithIndex.foreach { case ((phys, _), i) =>
             val idx = i + 2
             var dsum = java.math.BigDecimal.ZERO
@@ -3224,8 +2985,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             rows.foreach { r =>
               if (!r.isNullAt(idx)) { dnn += 1; dsum = dsum.add(toBig(r.get(idx))) }
             }
-            val sumKey = CommitLog.SumKeyPrefix + phys
-            m.get(sumKey).foreach { case (pv, _) =>
+            sums.get(phys).foreach { pv =>
               val next: Option[Any] = (pv match {
                 case l: Long => Some(java.math.BigDecimal.valueOf(l))
                 case d: CommitLog.DecV => Some(d.toBig)
@@ -3239,17 +2999,14 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
                   case _ => None
                 }
               }
-              m = next match {
-                case Some(v) => m.updated(sumKey, (v, v))
-                case None => m - sumKey // unrepresentable → absence refuses
+              sums = next match {
+                case Some(v) => sums.updated(phys, v)
+                case None => sums - phys // unrepresentable → absence refuses
               }
             }
-            val nKey = CommitLog.SumNPrefix + phys
-            m = prevNnOf(nKey, phys) match {
-              case Some(nn) =>
-                val v = java.lang.Long.valueOf(nn - dnn)
-                m.updated(nKey, (v, v))
-              case None => (m - nKey) - sumKey // can't maintain the pair
+            prevNnOf(phys) match {
+              case Some(c) => nn = nn.updated(phys, c - dnn)
+              case None => nn -= phys; sums -= phys // can't maintain the pair
             }
           }
           // r18: the non-sum columns' live counts, from the packed
@@ -3259,18 +3016,30 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             val bit = j % 63
             val dnn = rows.count(r =>
               ((r.getLong(chunkIdx) >> bit) & 1L) == 0L) // bit set = NULL
-            val nKey = CommitLog.SumNPrefix + phys
-            m = prevNnOf(nKey, phys) match {
-              case Some(nn) =>
-                val v = java.lang.Long.valueOf(nn - dnn)
-                m.updated(nKey, (v, v))
-              case None => m - nKey // underivable → absence refuses
+            nn = prevNnOf(phys) match {
+              case Some(c) => nn.updated(phys, c - dnn)
+              case None => nn - phys // underivable → absence refuses
             }
           }
-          val total = java.lang.Long.valueOf(prevDv + rows.size.toLong)
-          Some(rel -> m.updated(CommitLog.SumDvKey, (total, total)))
+          Some(rel -> FileEntry(rel, colStats = e.colStats, sums = sums,
+            liveNonNull = nn, dvAcc = Some(prevDv + rows.size.toLong)))
         }
       }
+    }
+  }
+
+  /** The `add_dv` statement about the masked files: each file gains
+    * its [[CommitLog.DvRef]] into sidecar `dvRel` and, under DV
+    * accounting, its restated stats block ([[dvSumRestated]]). */
+  private def dvEntries(s: Snapshot, touched: Seq[String], dvRel: String,
+      positions: Seq[(String, Long)], acct: DvAcct,
+      masked: Iterable[org.apache.spark.sql.Row]): Seq[FileEntry] = {
+    val relByBase = touched.map(f => new Path(f).getName -> f).toMap
+    val restated = dvSumRestated(s, touched, acct, masked)
+    positions.groupBy(_._1).toSeq.map { case (b, ps) =>
+      val rel = relByBase(b)
+      restated.getOrElse(rel, FileEntry(rel))
+        .copy(dvs = Seq(CommitLog.DvRef(dvRel, ps.size.toLong)))
     }
   }
 
@@ -3307,9 +3076,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * to the scan for files whose manifests predate row harvesting. */
   private def liveCountOf(s: Snapshot, sch: StructType,
       touched: Seq[String]): Long = {
-    val known = touched.map(s.liveRowCount)
+    val known = touched.map(s.entry(_).liveRows)
     if (known.forall(_.isDefined)) known.flatten.sum
-    else readFiles(sch, touched, s.dvs).count()
+    else readFiles(sch, touched, s.dvsOf).count()
   }
 
   private def tryDvDelete(s: Snapshot, sch: StructType,
@@ -3333,15 +3102,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     if (live > 0 && matched.length.toDouble / live > maxRatio) return None
     val positions = matched.map(r => (r.getString(0), r.getLong(1))).toSeq
     val dvRel = writeDv(positions)
-    val byBase: Map[String, Long] =
-      positions.groupBy(_._1).map { case (f, ps) => f -> ps.size.toLong }
-    val relByBase = touched.map(f => new Path(f).getName -> f).toMap
-    val dvAdd: Map[String, Seq[CommitLog.DvRef]] = byBase.map { case (b, n) =>
-      relByBase(b) -> Seq(CommitLog.DvRef(dvRel, n))
-    }
-    val won = try tryCommit(s.version + 1,
-        manifestJson(s.version + 1, "add_dv", Nil, sch, txn,
-          stats = dvSumRestated(s, touched, acct, matched), dvs = dvAdd))
+    val won = try tryCommit(Manifest(s.version + 1, "add_dv",
+        entries = dvEntries(s, touched, dvRel, positions, acct, matched),
+        schema = Some(sch), txn = txn))
       catch { case e: Throwable => deleteData(dvRel); throw e }
     if (won) Some(Some(s.version + 1))
     else { deleteData(dvRel); Some(None) }
@@ -3396,17 +3159,10 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val dvRel = try writeDv(positions)
       catch { case e: Throwable => newFiles.foreach(deleteData); throw e }
     def cleanup(): Unit = { newFiles.foreach(deleteData); deleteData(dvRel) }
-    val byBase: Map[String, Long] =
-      positions.groupBy(_._1).map { case (f, ps) => f -> ps.size.toLong }
-    val relByBase = touched.map(f => new Path(f).getName -> f).toMap
-    val dvAdd: Map[String, Seq[CommitLog.DvRef]] = byBase.map { case (b, n) =>
-      relByBase(b) -> Seq(CommitLog.DvRef(dvRel, n))
-    }
-    val won = try tryCommit(s.version + 1,
-        manifestJson(s.version + 1, "add_dv", newFiles, sch, txn,
-          fileParts = newTags, stats = statsFor(newFiles, s)
-            ++ dvSumRestated(s, touched, acct, matched),
-          blooms = bloomsFor(newFiles, Some(sch)), dvs = dvAdd))
+    val won = try tryCommit(Manifest(s.version + 1, "add_dv", newFiles,
+        entriesFor(newFiles, s, Some(sch), newTags)
+          ++ dvEntries(s, touched, dvRel, positions, acct, matched),
+        Some(sch), txn))
       catch { case e: Throwable => cleanup(); throw e }
     if (won) Some(Some(s.version + 1))
     else { cleanup(); Some(None) }
@@ -3470,7 +3226,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         case None =>
           val hit = coalesce(condition, lit(false))
-          val updated = readFiles(sch, touched, s.dvs)
+          val updated = readFiles(sch, touched, s.dvsOf)
             .select(sch.fields.map(f => assigned(f, col(f.name), hit))
               .toIndexedSeq: _*)
           validateConstraints(updated)
@@ -3650,7 +3406,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           if (candidates.isEmpty) Nil
           else {
             val byName = candidates.map(f => new Path(f).getName -> f).toMap
-            readFiles(sch0, candidates, s.dvs)
+            readFiles(sch0, candidates, s.dvsOf)
               .select(keys.map(col) :+ input_file_name().as("__f"): _*)
               .join(source.select(keys.map(col): _*), keys, "left_semi")
               .select("__f").distinct().collect()
@@ -3697,7 +3453,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             val byName = candidates.map(f => new Path(f).getName -> f).toMap
             // the file name projects BELOW the join — input_file_name()
             // refuses to evaluate above a plan with two sources
-            val anti = readFiles(sch0, candidates, s.dvs)
+            val anti = readFiles(sch0, candidates, s.dvsOf)
               .withColumn("__f", input_file_name()).as("t")
               .join(source.select(keys.map(col): _*).as("s"),
                 keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
@@ -3729,7 +3485,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           // phase 3 (copy-on-write): full-outer join touched rows with
           // the source, resolve each row's first-true clause, project
           // the survivors
-          val base = conform(readFiles(sch0, touched, s.dvs), sch)
+          val base = conform(readFiles(sch0, touched, s.dvsOf), sch)
           val staged = mergeStage(base, source, keys, sch,
             matchedClauses, insertClauses, bySourceClauses, Nil)
           val dropActs: Seq[Int] = (-1 +: matchedClauses.zipWithIndex.collect {
@@ -3974,17 +3730,10 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val dvRel = try writeDv(positions)
       catch { case e: Throwable => newFiles.foreach(deleteData); throw e }
     def cleanup(): Unit = { newFiles.foreach(deleteData); deleteData(dvRel) }
-    val byBase: Map[String, Long] =
-      positions.groupBy(_._1).map { case (f, ps) => f -> ps.size.toLong }
-    val relByBase = touched.map(f => new Path(f).getName -> f).toMap
-    val dvAdd: Map[String, Seq[CommitLog.DvRef]] = byBase.map { case (b, n) =>
-      relByBase(b) -> Seq(CommitLog.DvRef(dvRel, n))
-    }
-    val won = try tryCommit(s.version + 1,
-        manifestJson(s.version + 1, "add_dv", newFiles, sch, txn,
-          fileParts = newTags, stats = statsFor(newFiles, s)
-            ++ dvSumRestated(s, touched, acct, matched),
-          blooms = bloomsFor(newFiles, Some(sch)), dvs = dvAdd))
+    val won = try tryCommit(Manifest(s.version + 1, "add_dv", newFiles,
+        entriesFor(newFiles, s, Some(sch), newTags)
+          ++ dvEntries(s, touched, dvRel, positions, acct, matched),
+        Some(sch), txn))
       catch { case e: Throwable => cleanup(); throw e }
     if (won) Some(Some(s.version + 1))
     else { cleanup(); Some(None) }
@@ -4071,7 +3820,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         if (candidates.isEmpty) Nil
         else {
           val byName = candidates.map(f => new Path(f).getName -> f).toMap
-          readFiles(sch0, candidates, s.dvs)
+          readFiles(sch0, candidates, s.dvsOf)
             .select(keys.map(col) :+ input_file_name().as("__f"): _*)
             .join(mk, keys, "left_semi")
             .select("__f").distinct().collect()
@@ -4085,7 +3834,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           attempts += 1
           require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
         case None =>
-          val survivors = conform(readFiles(sch0, touched, s.dvs), sch)
+          val survivors = conform(readFiles(sch0, touched, s.dvsOf), sch)
             .join(mk, keys, "left_anti")
           val rewritten =
             if (rowsHasData) survivors.union(conform(rows, sch)) else survivors
@@ -4146,17 +3895,10 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     val dvRel = try writeDv(positions)
       catch { case e: Throwable => newFiles.foreach(deleteData); throw e }
     def cleanup(): Unit = { newFiles.foreach(deleteData); deleteData(dvRel) }
-    val byBase: Map[String, Long] =
-      positions.groupBy(_._1).map { case (f, ps) => f -> ps.size.toLong }
-    val relByBase = touched.map(f => new Path(f).getName -> f).toMap
-    val dvAdd: Map[String, Seq[CommitLog.DvRef]] = byBase.map { case (b, n) =>
-      relByBase(b) -> Seq(CommitLog.DvRef(dvRel, n))
-    }
-    val won = try tryCommit(s.version + 1,
-        manifestJson(s.version + 1, "add_dv", newFiles, sch, txn,
-          fileParts = newTags, stats = statsFor(newFiles, s)
-            ++ dvSumRestated(s, touched, acct, matched),
-          blooms = bloomsFor(newFiles, Some(sch)), dvs = dvAdd))
+    val won = try tryCommit(Manifest(s.version + 1, "add_dv", newFiles,
+        entriesFor(newFiles, s, Some(sch), newTags)
+          ++ dvEntries(s, touched, dvRel, positions, acct, matched),
+        Some(sch), txn))
       catch { case e: Throwable => cleanup(); throw e }
     if (won) Some(Some(s.version + 1))
     else { cleanup(); Some(None) }
@@ -4195,17 +3937,14 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       require(missing.isEmpty,
         s"$tableRoot: ${missing.size} data file(s) of version $version are " +
           s"gone (vacuumed?) — cannot restore, e.g. ${missing.take(3).mkString(", ")}")
-      if (tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace", old.files, sch, txn,
-            fileParts = old.parts, stats = old.stats, blooms = old.blooms,
-            dvs = old.dvs, fileRows = old.rows, fileNulls = old.nulls,
-            // restored files keep the spec ids they were written under
-            // (explicit for EVERY tagged file — a pre-evolve version's
-            // files are spec 0 and must not default to current; the
-            // registry itself is append-only and carries forward — a
-            // spec evolution is not undone by a data restore)
-            fileSpecs = if (s.specs.isEmpty) Map.empty
-              else old.parts.keysIterator.map(f => f -> old.specIdOf(f)).toMap)))
+      // restored files keep the spec ids they were written under
+      // (explicit for EVERY tagged file — a pre-evolve version's files
+      // are spec 0 and must not default to current; the registry itself
+      // is append-only and carries forward — a spec evolution is not
+      // undone by a data restore)
+      val restated = old.entries.values.toSeq
+      if (tryCommit(Manifest(s.version + 1, "replace", old.files, restated,
+          Some(sch), txn, specIds = specIdsOf(s, restated))))
         return s.version + 1
       attempts += 1
       require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
@@ -4259,30 +3998,16 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     def abs(f: String): String =
       if (CommitLog.isExternalEntry(f)) f
       else fs.makeQualified(new Path(rootPath, f)).toUri.getPath
-    val files = s.files.map(abs)
-    // re-key the per-file metadata maps to the absolute entries,
-    // restricted to the LIVE files (stale keys of retired files may
-    // linger in a folded snapshot's maps; the clone starts clean)
-    val parts  = s.files.flatMap(f => s.parts.get(f).map(abs(f) -> _)).toMap
-    val stats  = s.files.flatMap(f => s.stats.get(f).map(abs(f) -> _)).toMap
-    val blooms = s.files.flatMap(f => s.blooms.get(f).map(abs(f) -> _)).toMap
-    // deletion vectors travel too — both the data-file keys and the
-    // sidecar paths go absolute, or the clone would resurrect rows
-    val dvs = s.files.flatMap(f => s.dvs.get(f).map(refs =>
-      abs(f) -> refs.map(r => r.copy(path = abs(r.path))))).toMap
-    val rows = s.files.flatMap(f => s.rows.get(f).map(abs(f) -> _)).toMap
-    val nulls = s.files.flatMap(f => s.nulls.get(f).map(abs(f) -> _)).toMap
-    require(target.tryCommit(0L,
-      target.manifestJson(0L, "add", files, sch, txn = None,
-        fileParts = parts, stats = stats, blooms = blooms,
-        physRetired = Some(s.physRetired), dvs = dvs, fileRows = rows,
-        fileNulls = nulls,
-        // an evolved table's clone carries the registry and each
-        // file's spec id verbatim — tags stay interpretable
-        partSpecs = if (s.specs.isEmpty) None else Some(s.specs),
-        fileSpecs = if (s.specs.isEmpty) Map.empty
-          else s.files.flatMap(f =>
-            s.parts.get(f).map(_ => abs(f) -> s.specIdOf(f))).toMap)),
+    // every entry re-keyed to its absolute path; deletion vectors
+    // travel too — their sidecar paths go absolute, or the clone would
+    // resurrect rows
+    val cloned = s.entries.values.toSeq.map(e => e.copy(path = abs(e.path),
+      dvs = e.dvs.map(r => r.copy(path = abs(r.path)))))
+    // an evolved table's clone carries the registry and each file's
+    // spec id verbatim — tags stay interpretable
+    require(target.tryCommit(Manifest(0L, "add", cloned.map(_.path), cloned,
+        Some(sch), physRetired = Some(s.physRetired),
+        specs = Some(s.specs).filter(_.nonEmpty), specIds = specIdsOf(s, cloned))),
       s"$targetRoot: lost the clone commit race — target is being written")
     0L
   }
@@ -4303,11 +4028,11 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * `partCol` so rewritten files keep tags; an untagged one must not. */
   private def requireTagState(s: Snapshot, partCol: Option[String],
       op: String): Unit = {
-    if (s.parts.nonEmpty) {
+    if (s.tagged) {
       require(partCol.isDefined,
         s"$tableRoot: table is partition-tagged — $op needs partCol so " +
           "rewritten files keep their tags")
-      val untagged = s.files.filterNot(s.parts.contains)
+      val untagged = s.files.filter(s.entry(_).partTag.isEmpty)
       require(untagged.isEmpty,
         s"$tableRoot: ${untagged.size} live files carry no partition tag — " +
           "rewrite the table through the partitioned path first")
@@ -4327,7 +4052,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     else {
       // rel path by basename: data-file names are globally unique
       val byName = candidates.map(f => new Path(f).getName -> f).toMap
-      readFiles(sch, candidates, s.dvs)
+      readFiles(sch, candidates, s.dvsOf)
         .filter(condition)
         .select(input_file_name().as("__f")).distinct()
         .collect()
@@ -4348,21 +4073,13 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         (tagged.map(_._1), tagged.toMap)
       case None => (writeData(rewritten, sch), Map.empty[String, String])
     }
-    val untouched = s.files.filterNot(touched.toSet)
-    val untouchedSet = untouched.toSet
-    val files = untouched ++ newFiles
-    val won = try tryCommit(s.version + 1,
-        manifestJson(s.version + 1, "replace", files, sch, txn,
-          fileParts = s.parts.filter(kv => untouchedSet(kv._1)) ++ newTags,
-          stats = s.stats.filter(kv => untouchedSet(kv._1))
-            ++ statsFor(newFiles, s),
-          blooms = s.blooms.filter(kv => untouchedSet(kv._1))
-            ++ bloomsFor(newFiles, Some(sch)),
-          // untouched files keep their deletion vectors; the rewrite
-          // read the touched files MASKED, so theirs retire with them
-          dvs = s.dvs.filter(kv => untouchedSet(kv._1)),
-          fileRows = s.rows.filter(kv => untouchedSet(kv._1)),
-          fileNulls = s.nulls.filter(kv => untouchedSet(kv._1))))
+    // untouched files ride through whole, deletion vectors included;
+    // the rewrite read the touched files MASKED, so theirs retire
+    val touchedSet = touched.toSet
+    val untouched = s.entries.values.filterNot(e => touchedSet(e.path)).toSeq
+    val won = try tryCommit(Manifest(s.version + 1, "replace",
+        untouched.map(_.path) ++ newFiles,
+        untouched ++ entriesFor(newFiles, s, Some(sch), newTags), Some(sch), txn))
       catch { case e: Throwable => newFiles.foreach(deleteData); throw e }
     if (won) Some(s.version + 1)
     else { newFiles.foreach(deleteData); None }
@@ -4408,7 +4125,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     import org.apache.spark.sql.catalyst.expressions._
     // internal eval values → the stats domain (Long / Double / String);
     // DATE folds to epoch-day Long and TIMESTAMP to epoch-micros Long,
-    // both exactly the form [[statsFor]] records for INT32/INT64
+    // both exactly the form [[statsForOne]] records for INT32/INT64
     def litVal(e: Expression): Option[Any] =
       if (!e.foldable || e.exists(_.isInstanceOf[Attribute])) None
       else e.eval(null) match {
@@ -4654,7 +4371,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     }
     // top-level equality conjuncts additionally probe the per-file
     // Bloom filters (when indexed) — the value stringifies THROUGH the
-    // already-inserted cast, matching [[bloomsFor]]'s hashing exactly;
+    // already-inserted cast, matching [[bloomsForCfg]]'s hashing exactly;
     // an unevaluable probe just skips bloom pruning for that conjunct.
     // r16: a [[CommitLog.strShifted]] column (float→double widening)
     // never probes — pre-widening bits hash the OLD string form and a
@@ -4690,25 +4407,25 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     // keyed by the stable PHYSICAL names — translate at lookup
     s.files.filter { f =>
       bounds.forall { case (c, lo, hi) =>
-        s.stats.get(f).flatMap(_.get(physOf(s.schema, c))) match {
+        s.entry(f).colStats.get(physOf(s.schema, c)) match {
           // absent endpoints fall back to the file's own stat, which
           // makes that side of the overlap check trivially true
           case Some((mn, mx)) => overlaps(mn, mx, lo.getOrElse(mn), hi.getOrElse(mx))
           case None => true // no stats → cannot rule the file out
         }
       } && inLists.forall { case (c, vs) =>
-        s.stats.get(f).flatMap(_.get(physOf(s.schema, c))) match {
+        s.entry(f).colStats.get(physOf(s.schema, c)) match {
           case Some((mn, mx)) => vs.exists(v => overlaps(mn, mx, v, v))
           case None => true // no stats → cannot rule the file out
         }
       } && probes.forall { case (c, v) =>
-        s.blooms.get(f).flatMap(_.get(physOf(s.schema, c))) match {
+        s.entry(f).blooms.get(physOf(s.schema, c)) match {
           case Some(b) if b.era == eraByCol(c) => bloomMayContain(b, v)
           case _ => true // no filter (or a pre-widen era's) → keep
         }
       } && nullChecks.forall { case (c, needNull) =>
-        (s.nulls.get(f).flatMap(_.get(physOf(s.schema, c))),
-            s.rows.get(f)) match {
+        (s.entry(f).nulls.get(physOf(s.schema, c)),
+            s.entry(f).rows) match {
           case (Some(n), Some(r)) => if (needNull) n > 0 else n < r
           case _ => true // unknown counts → cannot rule the file out
         }
@@ -4757,7 +4474,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       case _ => None
     }
     // the tag/bloom domain: the value's cast-to-string, evaluated by
-    // the SAME Cast the write path and bloomsFor use
+    // the SAME Cast the write path and bloomsForCfg use
     def strVal(l: Literal): Option[String] = scala.util.Try(
       Option(Cast(l, org.apache.spark.sql.types.StringType).eval(null))
         .map(_.toString)).toOption.flatten
@@ -4781,13 +4498,13 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
             // them (the passed key is the CURRENT spec's); a spec not
             // keying this column keeps the file, conservative
             val resolved: Option[(PartSpec, Int)] =
-              if (s.specs.isEmpty || s.specIdOf(f) == s.currentSpecId)
+              if (s.specs.isEmpty || s.entry(f).specId == s.currentSpecId)
                 Some((spec, i))
-              else scala.util.Try(PartSpec.parse(s.specs(s.specIdOf(f))))
+              else scala.util.Try(PartSpec.parse(s.specs(s.entry(f).specId)))
                 .toOption.flatMap(sp =>
                   sp.keyIndexOf(logicalCol).map(j => (sp, j)))
             resolved match {
-              case Some((sp, j)) => s.parts.get(f) match {
+              case Some((sp, j)) => s.entry(f).partTag match {
                 case Some(tag) =>
                   // decode the file's tag component for this key and
                   // compare against the component the arriving value
@@ -4803,14 +4520,14 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
               case None => true
             }
         }
-        val statOk = s.stats.get(f).flatMap(_.get(phys)) match {
+        val statOk = s.entry(f).colStats.get(phys) match {
           case Some((mn, mx)) => statVal(v) match {
             case Some(x) => overlaps(mn, mx, x, x)
             case None => true
           }
           case None => true
         }
-        val bloomOk = s.blooms.get(f).flatMap(_.get(phys)) match {
+        val bloomOk = s.entry(f).blooms.get(phys) match {
           case Some(b) if b.era == era => strVal(v).forall(bloomMayContain(b, _))
           case _ => true
         }
@@ -4840,7 +4557,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     while (true) {
       val s = snapshot()
       require(s.version >= 0, s"$tableRoot: nothing to optimize")
-      require(s.parts.isEmpty,
+      require(!s.tagged,
         s"$tableRoot: partition-tagged table — use optimizePartitions; a " +
           "flat rewrite would drop the partition tags")
       val df = readAt(s)
@@ -4854,11 +4571,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       // from the snapshot's own self-describing filters — a layout
       // maintenance op must never silently strip the table's index
       val cfg = effectiveBloomCfg()
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace", files,
-            s.schema.getOrElse(laid.schema), None,
-            stats = statsFor(files, s),
-            blooms = bloomsForCfg(files, cfg, s.schema)))
+      val won = try tryCommit(Manifest(s.version + 1, "replace", files,
+          entriesFor(files, s, s.schema, bloomCfg = cfg),
+          Some(s.schema.getOrElse(laid.schema))))
         catch { case e: Throwable => files.foreach(deleteData); throw e }
       if (won) return s.version + 1
       // lost the version race: the rewrite reflects a stale snapshot —
@@ -4916,9 +4631,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     while (true) {
       val s = snapshot()
       require(s.version >= 0, s"$tableRoot: nothing to optimize")
-      require(s.parts.nonEmpty,
+      require(s.tagged,
         s"$tableRoot: table is not partition-tagged — use optimize()")
-      val untagged = s.files.filterNot(s.parts.contains)
+      val untagged = s.files.filter(s.entry(_).partTag.isEmpty)
       require(untagged.isEmpty,
         s"$tableRoot: ${untagged.size} live files carry no partition tag — " +
           "rewrite the table through the partitioned path first")
@@ -4926,7 +4641,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       requireSingleSpec(s, "optimizePartitioned")
       val sch = s.schema.getOrElse(throw new IllegalStateException(
         s"$tableRoot: committed version ${s.version} carries no schema"))
-      val byPart: Map[String, Seq[String]] = s.files.groupBy(s.parts(_))
+      val byPart: Map[String, Seq[String]] = s.files.groupBy(s.entry(_).partTag.get)
       val wanted: Set[String] =
         if (partitions.isEmpty) byPart.keySet
         else {
@@ -4941,7 +4656,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       if (touchedParts.isEmpty) return s.version // already laid out
       val touchedSet = touchedParts.toSet
       val touchedFiles = touchedParts.flatMap(byPart)
-      val df = readFiles(sch, touchedFiles, s.dvs)
+      val df = readFiles(sch, touchedFiles, s.dvsOf)
       val n = touchedParts.size * targetFilesPerPartition
       val tagOf = optSpec.tagExpr(df)
       val laid =
@@ -4976,11 +4691,9 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       require(tagged.map(_._2).toSet.subsetOf(touchedSet),
         s"$tableRoot: optimize produced rows outside the touched partitions")
       val cfg = effectiveBloomCfg()
-      val won = try tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace_parts", tagged.map(_._1), sch,
-            None, parts = touchedParts, fileParts = tagged.toMap,
-            stats = statsFor(tagged.map(_._1), s),
-            blooms = bloomsForCfg(tagged.map(_._1), cfg, Some(sch))))
+      val won = try tryCommit(Manifest(s.version + 1, "replace_parts",
+          tagged.map(_._1), entriesFor(tagged.map(_._1), s, Some(sch), tagged.toMap, cfg),
+          Some(sch), retiredParts = touchedParts))
         catch { case e: Throwable => tagged.foreach(t => deleteData(t._1)); throw e }
       if (won) return s.version + 1
       tagged.foreach(t => deleteData(t._1))
@@ -5004,44 +4717,15 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     while (true) {
       val s = snapshot()
       require(s.version >= 0, s"$tableRoot: nothing to compact")
-      val root = mapper.createObjectNode()
-      root.put("version", s.version + 1)
-      root.put("action", "replace")
-      root.put("checkpoint", true)
-      root.put("ts", System.currentTimeMillis())
-      val arr = root.putArray("files")
-      s.files.foreach(arr.add)
-      // defensive live-set filter; the fold keeps parts/stats ⊆ files,
-      // and the Set build keeps the checkpoint O(files), not O(files²)
-      val live = s.files.toSet
-      if (s.parts.nonEmpty) {
-        val fp = root.putObject("fileParts")
-        s.parts.filter(kv => live(kv._1))
-          .foreach { case (f, p) => fp.put(f, p) }
-      }
-      // r18: an evolved table's checkpoint restates the spec registry
-      // and every tagged live file's spec id — the fold stays correct
-      // when pre-checkpoint manifests (incl. the evolve commit) prune
-      if (s.specs.nonEmpty) {
-        val ps = root.putArray("partSpecs")
-        s.specs.foreach(ps.add)
-        val fsN = root.putObject("fileSpecs")
-        s.files.foreach(f =>
-          if (s.parts.contains(f)) fsN.put(f, s.specIdOf(f)))
-      }
-      putStats(root, s.stats.filter(kv => live(kv._1)))
-      putRows(root, s.rows.filter(kv => live(kv._1)))
-      putNulls(root, s.nulls.filter(kv => live(kv._1)))
-      putBlooms(root, s.blooms.filter(kv => live(kv._1)))
-      putDvs(root, s.dvs.filter(kv => live(kv._1)))
-      s.schema.foreach(sc => root.put("schema", sc.json))
-      if (s.physRetired.nonEmpty) {
-        val pr = root.putArray("physRetired")
-        s.physRetired.foreach(pr.add)
-      }
-      val tn = root.putObject("txns")
-      s.txns.foreach { case (id, epoch) => tn.put(id, epoch) }
-      if (tryCommit(s.version + 1, mapper.writeValueAsString(root))) {
+      // an evolved table's checkpoint restates the spec registry and
+      // every tagged live file's spec id — the fold stays correct when
+      // pre-checkpoint manifests (incl. the evolve commit) prune
+      val ckpt = Manifest(s.version + 1, "replace", s.files,
+        s.entries.values.toSeq, s.schema, checkpoint = true,
+        specs = Some(s.specs).filter(_.nonEmpty),
+        specIds = specIdsOf(s, s.entries.values),
+        physRetired = Some(s.physRetired).filter(_.nonEmpty), txns = s.txns)
+      if (tryCommit(ckpt)) {
         writeCheckpointHint(s.version + 1)
         return s.version + 1
       }
@@ -5064,20 +4748,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       val p = new Path(logDir, "_last_checkpoint")
       val keep = try {
         if (!fs.exists(p)) false
-        else {
-          val in = fs.open(p)
-          val raw = try {
-            val st = fs.getFileStatus(p)
-            val bytes = new Array[Byte](st.getLen.toInt)
-            in.readFully(bytes); new String(bytes, "UTF-8")
-          } finally in.close()
-          mapper.readTree(raw).get("version").asLong() >= v
-        }
+        else ManifestCodec.hintVersion(fs, p) >= v
       } catch { case _: Exception => false }
       if (!keep) {
         val tmp = new Path(logDir, s"._last_checkpoint-${UUID.randomUUID()}")
         val out = fs.create(tmp, true)
-        try out.write(s"""{"version":$v}""".getBytes("UTF-8"))
+        try out.write(ManifestCodec.hint(v).getBytes("UTF-8"))
         finally out.close()
         // rename-into-place; delete-first where rename won't replace.
         // The gap (hint briefly absent) costs one full fold at most.
@@ -5113,19 +4789,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".json")
         && !s.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
-    def meta(m: org.apache.hadoop.fs.FileStatus): (Boolean, Long) = {
-      val in = fs.open(m.getPath)
-      val raw = try {
-        val bytes = new Array[Byte](m.getLen.toInt)
-        in.readFully(bytes); new String(bytes, "UTF-8")
-      } finally in.close()
-      val node = mapper.readTree(raw)
+    def meta(st: org.apache.hadoop.fs.FileStatus): (Boolean, Long) = {
+      val m = parseManifest(st)
       // effective age = the YOUNGER of the embedded commit clock and
       // the file's modification time — a lagging writer clock cannot
       // prune a wall-clock-recent version (r17, ADVICE r16)
-      (Option(node.get("checkpoint")).exists(_.asBoolean()),
-        math.max(Option(node.get("ts")).map(_.asLong()).getOrElse(0L),
-          m.getModificationTime))
+      (m.checkpoint, math.max(m.ts.getOrElse(0L), st.getModificationTime))
     }
     val best =
       if (retainMs <= 0L) {
@@ -5229,15 +4898,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     }
     if (!fs.exists(dataDir)) return 0
     val referenced = parsedManifests(Long.MaxValue)
-      .flatMap { node =>
-        val fls = node.get("files").elements().asScala.map(f =>
-          new Path(rootPath, f.asText()).getName)
+      .flatMap { m =>
         // DV sidecars live under data/ too — referenced while any
         // retained manifest names them, reclaimed after prune like
         // the data files they mask
-        val dvps = parseDvs(node).valuesIterator.flatten.map(r =>
-          new Path(rootPath, r.path).getName)
-        fls ++ dvps
+        (m.files ++ m.entries.flatMap(_.dvs.map(_.path)))
+          .map(f => new Path(rootPath, f).getName)
       }
       .toSet
     // r16: only files OLDER than the freshness floor reclaim — a
@@ -5315,8 +4981,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       // gated off for mapped tables at the catalog — this is the
       // defense-in-depth backstop for any other caller)
       val identity = identityMapping(sch)
-      val kept = s.files.filterNot(retire)
-      val keptSet = kept.toSet
+      val kept = s.entries.values.filterNot(e => retire(e.path)).toSeq
       def stagedDf: DataFrame = spark.read.schema(sch)
         .parquet(staged.map(_.getPath.toString).toSeq: _*)
       val (newFiles, newTags) = partCol match {
@@ -5346,18 +5011,12 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
           (moved, Map.empty[String, String])
       }
       try {
-        val won = tryCommit(s.version + 1,
-          manifestJson(s.version + 1, "replace", kept ++ newFiles, sch, None,
-            fileParts = s.parts.filter(kv => keptSet(kv._1)) ++ newTags,
-            stats = s.stats.filter(kv => keptSet(kv._1)) ++ statsFor(newFiles, s),
-            blooms = s.blooms.filter(kv => keptSet(kv._1))
-              ++ bloomsFor(newFiles, Some(sch)),
-            // kept files carry their deletion vectors through; the
-            // retired files' DVs retire with them (the row-level scan
-            // read those files masked)
-            dvs = s.dvs.filter(kv => keptSet(kv._1)),
-            fileRows = s.rows.filter(kv => keptSet(kv._1)),
-            fileNulls = s.nulls.filter(kv => keptSet(kv._1))))
+        // kept files carry their deletion vectors through; the retired
+        // files' DVs retire with them (the row-level scan read those
+        // files masked)
+        val won = tryCommit(Manifest(s.version + 1, "replace",
+          kept.map(_.path) ++ newFiles,
+          kept ++ entriesFor(newFiles, s, Some(sch), newTags), Some(sch)))
         require(won,
           s"$tableRoot: lost the commit race during the row-level " +
             "operation — concurrent write detected, retry the statement")
@@ -5390,7 +5049,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     try {
       val s0 = snapshot()
       mergedSchema(s0.schema, writeSchema) // loud type-conflict check BEFORE moving
-      require(s0.parts.isEmpty,
+      require(!s0.tagged,
         s"$tableRoot: staged-add on a partition-tagged table would break the " +
           "all-tagged invariant — route through appendPartitioned")
       // staged files carry LOGICAL names (Spark's generic FileWrite);
@@ -5417,20 +5076,17 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
       var cur = s0
       var attempts = 0
       try {
-        val st = statsFor(moved, s0)
-        val bl = bloomsFor(moved, Some(mergedSchema(s0.schema, writeSchema)))
-        while (!tryCommit(cur.version + 1,
-            manifestJson(cur.version + 1, "add", moved,
-              assignPhys(mergedSchema(cur.schema, writeSchema),
-                cur.schema, cur.physRetired),
-              None, stats = st, blooms = bl))) {
+        val es = entriesFor(moved, s0, Some(mergedSchema(s0.schema, writeSchema)))
+        while (!tryCommit(Manifest(cur.version + 1, "add", moved, es,
+            Some(assignPhys(mergedSchema(cur.schema, writeSchema),
+              cur.schema, cur.physRetired))))) {
           attempts += 1
           require(attempts <= MaxAttempts, s"$tableRoot: lost $MaxAttempts version races")
           cur = snapshot()
           // a racer may have made the table partition-tagged since the
           // first snapshot — the untagged-only precondition must hold
           // against the snapshot we actually commit on
-          require(cur.parts.isEmpty,
+          require(!cur.tagged,
             s"$tableRoot: table became partition-tagged during the staged " +
               "add — retry through appendPartitioned")
         }
@@ -5484,7 +5140,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     // truncate binary stats (PARQUET-1685 — min a prefix, max
     // incremented; valid for pruning, WRONG as a pushed MIN/MAX
     // answer, and undetectable at read time). Pin the writer to
-    // no-truncation so every stat [[statsFor]] harvests is exact
+    // no-truncation so every stat [[statsForOne]] harvests is exact
     // (ADVICE r14).
     toPhys(shaped, sch).write
       .option("parquet.statistics.truncate.length", Int.MaxValue.toString)
@@ -5626,41 +5282,42 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     sb.toString
   }
 
-  /** Per-file (column → (min, max)) harvested from the parquet footers
-    * of freshly committed files — merged across row groups; top-level
-    * numeric and string primitives only (decimals, nested paths and
-    * binary blobs record nothing and are simply never pruned). The
+  /** The manifest entries of freshly written files: per-column
+    * (min, max), the exact row count and per-column null counts
+    * harvested from the parquet footers ([[statsForOne]]), exact sums
+    * of the effective sum columns ([[sumsFor]]), Bloom filters under
+    * `bloomCfg` ([[bloomsForCfg]]) and partition `tags`. Footer stats
+    * cover top-level numeric and string primitives only (nested paths
+    * and binary blobs record nothing and are simply never pruned). The
     * footer read is metadata-sized and happens once per commit, which
     * is what lets [[readRange]] skip files forever after. */
-  private def statsFor(relPaths: Seq[String], snap: => Snapshot)
-      : Map[String, Map[String, (Any, Any)]] = {
+  private def entriesFor(relPaths: Seq[String], snap: => Snapshot,
+      sch: Option[StructType], tags: Map[String, String] = Map.empty,
+      bloomCfg: => Option[(Seq[String], Int, Int)] = effectiveBloomCfg())
+      : Seq[FileEntry] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     // footer reads are independent metadata round-trips — run them
     // concurrently so a 1,000-file commit pays ~max latency, not the
     // sum (the one-job write win would otherwise drain away here)
-    val futures = relPaths.map(rel => Future(rel -> statsForOne(rel)))
-    val base = Await.result(Future.sequence(futures), Duration.Inf)
-      .filter(_._2.nonEmpty).toMap
-    // r16: per-file exact SUMS ride the same stats channel under
-    // reserved [[CommitLog.SumKeyPrefix]] keys when configured. The
-    // snapshot is THREADED IN by the caller (r17, ADVICE r16): every
-    // commit path already holds its pre-commit fold, so the sum-config
-    // derivation costs zero extra snapshot folds per write.
+    val futures = relPaths.map(rel => Future(statsForOne(rel)))
+    val footers = Await.result(Future.sequence(futures), Duration.Inf)
+    // r16: per-file exact SUMS when configured. The snapshot is
+    // THREADED IN by the caller (r17, ADVICE r16): every commit path
+    // already holds its pre-commit fold, so the sum-config derivation
+    // costs zero extra snapshot folds per write.
     lazy val snapForSums = snap
-    effectiveSumCfg(() => snapForSums) match {
-      case None => base
-      case Some(cols) =>
-        val sums = sumsFor(relPaths, cols, snapForSums)
-        if (sums.isEmpty) base
-        else (base.keySet ++ sums.keySet).iterator.map(f =>
-          f -> (base.getOrElse(f, Map.empty) ++ sums.getOrElse(f, Map.empty)))
-          .toMap
-    }
+    val sums = effectiveSumCfg(() => snapForSums)
+      .fold(Map.empty[String, Map[String, Any]])(sumsFor(relPaths, _, snapForSums))
+    val blooms = bloomsForCfg(relPaths, bloomCfg, sch)
+    footers.map(e => e.copy(partTag = tags.get(e.path),
+      sums = sums.getOrElse(e.path, Map.empty),
+      blooms = blooms.getOrElse(e.path, Map.empty)))
   }
 
-  private def statsForOne(rel: String): Map[String, (Any, Any)] = {
+  /** One file's footer facts: rows, null counts and column stats. */
+  private def statsForOne(rel: String): FileEntry = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
       new Path(rootPath, rel), spark.sparkContext.hadoopConfiguration))
     val byCol = scala.collection.mutable.LinkedHashMap.empty[String, (Any, Any)]
@@ -5708,16 +5365,8 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
         }
       }
     } finally reader.close()
-    // r14: the file's EXACT row count and per-column null counts ride
-    // in the same map under reserved DOTTED pseudo-keys — the harvest
-    // loop above skips every dotted path, so no real top-level column
-    // can ever write these entries; [[manifestJson]] splits them out
-    // before serialization.
-    byCol(CommitLog.RowsKey) = (rowCount, rowCount)
-    nulls.foreach { case (c, n) =>
-      byCol(CommitLog.NullsKeyPrefix + c) = (n, n)
-    }
-    byCol.toMap
+    FileEntry(rel, rows = Some(rowCount), nulls = nulls.toMap,
+      colStats = byCol.toMap)
   }
 
   private sealed trait ChunkStats
@@ -5884,191 +5533,22 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     CommitLog.statusCache.remove(fs.makeQualified(p).toString)
   }
 
-  private def putStats(root: ObjectNode,
-      stats: Map[String, Map[String, (Any, Any)]]): Unit =
-    if (stats.nonEmpty) {
-      val fsNode = root.putObject("fileStats")
-      stats.foreach { case (f, cols) =>
-        val cn = fsNode.putObject(f)
-        cols.foreach { case (c, (mn, mx)) =>
-          val o = cn.putObject(c)
-          (mn, mx) match {
-            case (CommitLog.TsUs(a), CommitLog.TsUs(b)) =>
-              o.put("t", "ts"); o.put("mn", a); o.put("mx", b)
-            case (a: CommitLog.DecV, b: CommitLog.DecV) if a.scale == b.scale =>
-              // scales are equal within one harvested file (one parquet
-              // type per column); a mismatched pair cannot be restated
-              // under one scale tag, so it falls to the drop-arm below
-              o.put("t", "dec"); o.put("sc", a.scale)
-              o.put("mn", a.unscaled); o.put("mx", b.unscaled)
-            case (a: Long, b: Long)     => o.put("t", "l"); o.put("mn", a); o.put("mx", b)
-            case (a: Double, b: Double) => o.put("t", "d"); o.put("mn", a); o.put("mx", b)
-            case (a: String, b: String) => o.put("t", "s"); o.put("mn", a); o.put("mx", b)
-            case _ => ()
-          }
-        }
-      }
-    }
-
-  private def parseStats(node: JsonNode): Map[String, Map[String, (Any, Any)]] =
-    Option(node.get("fileStats")).map(_.properties().asScala.map { e =>
-      e.getKey -> e.getValue.properties().asScala.flatMap { ce =>
-        val o = ce.getValue
-        val parsed: Option[(Any, Any)] =
-          Option(o.get("t")).map(_.asText()) match {
-            case Some("ts") => Some((CommitLog.TsUs(o.get("mn").asLong()),
-              CommitLog.TsUs(o.get("mx").asLong())))
-            case Some("dec") if o.has("sc") =>
-              val sc = o.get("sc").asInt()
-              Some((CommitLog.DecV(o.get("mn").asLong(), sc),
-                CommitLog.DecV(o.get("mx").asLong(), sc)))
-            case Some("l") => Some((o.get("mn").asLong(), o.get("mx").asLong()))
-            case Some("d") => Some((o.get("mn").asDouble(), o.get("mx").asDouble()))
-            case Some("s") => Some((o.get("mn").asText(), o.get("mx").asText()))
-            case _ => None
-          }
-        parsed.map(ce.getKey -> _)
-      }.toMap
-    }.toMap).getOrElse(Map.empty)
-
-  private def manifestJson(v: Long, action: String, files: Seq[String],
-      schema: StructType, txn: Option[(String, Long)],
-      parts: Seq[String] = Nil,
-      fileParts: Map[String, String] = Map.empty,
-      stats: Map[String, Map[String, (Any, Any)]] = Map.empty,
-      blooms: Map[String, Map[String, CommitLog.BloomF]] = Map.empty,
-      physRetired: Option[Seq[String]] = None,
-      dvs: Map[String, Seq[CommitLog.DvRef]] = Map.empty,
-      // carried per-file row/null counts (restatements of files whose
-      // footers were harvested by an EARLIER commit — restore, clone,
-      // partial rewrites). Freshly harvested files need nothing here:
-      // their counts ride inside `stats` under [[CommitLog.RowsKey]] /
-      // [[CommitLog.NullsKeyPrefix]] and are split out below.
-      fileRows: Map[String, Long] = Map.empty,
-      fileNulls: Map[String, Map[String, Long]] = Map.empty,
-      // r18: the partition-spec registry (full restatement — only
-      // evolve_spec and restores/checkpoints of evolved tables write
-      // it) and explicit per-file spec ids (restatements whose files
-      // must NOT default to the current spec). Single-spec tables
-      // write neither — their manifests stay byte-identical to r17.
-      partSpecs: Option[Seq[String]] = None,
-      fileSpecs: Map[String, Int] = Map.empty): String = {
-    val root = mapper.createObjectNode()
-    root.put("version", v)
-    root.put("action", action)
-    root.put("ts", System.currentTimeMillis()) // [[readAsOfTime]]
-    val arr = root.putArray("files")
-    files.foreach(arr.add)
-    if (parts.nonEmpty) {
-      val pa = root.putArray("parts"); parts.foreach(pa.add)
-    }
-    if (fileParts.nonEmpty) {
-      val fp = root.putObject("fileParts")
-      fileParts.foreach { case (f, p) => fp.put(f, p) }
-    }
-    partSpecs.foreach { ss =>
-      val pa = root.putArray("partSpecs"); ss.foreach(pa.add)
-    }
-    if (fileSpecs.nonEmpty) {
-      val fsN = root.putObject("fileSpecs")
-      fileSpecs.foreach { case (f, i) => fsN.put(f, i) }
-    }
-    // split the harvest-time pseudo entries ([[CommitLog.RowsKey]],
-    // [[CommitLog.NullsKeyPrefix]]) out of the per-column stats: the
-    // SERIALIZED manifest and the folded [[Snapshot]] keep row/null
-    // counts structurally separate from column min/max (no reserved
-    // name can ever shadow a real column at pruning time — the keys
-    // never reach `Snapshot.stats`)
-    val harvestedRows: Map[String, Long] = stats.flatMap { case (f, cols) =>
-      cols.get(CommitLog.RowsKey).map { case (n: Long, _) => f -> n }
-    }
-    val harvestedNulls: Map[String, Map[String, Long]] =
-      stats.flatMap { case (f, cols) =>
-        val ns = cols.collect {
-          case (k, (n: Long, _)) if k.startsWith(CommitLog.NullsKeyPrefix) =>
-            k.drop(CommitLog.NullsKeyPrefix.length) -> n
-        }
-        if (ns.isEmpty) None else Some(f -> ns)
-      }
-    putStats(root, stats.map { case (f, cols) =>
-      f -> cols.filterNot(kv => kv._1 == CommitLog.RowsKey
-        || kv._1.startsWith(CommitLog.NullsKeyPrefix))
-    }.filter(_._2.nonEmpty))
-    putRows(root, fileRows ++ harvestedRows)
-    putNulls(root, fileNulls ++ harvestedNulls)
-    putBlooms(root, blooms)
-    putDvs(root, dvs)
-    root.put("schema", schema.json)
-    physRetired.foreach { r =>
-      val pr = root.putArray("physRetired"); r.foreach(pr.add)
-    }
-    txn.foreach { case (id, epoch) =>
-      val t = root.putObject("txn"); t.put("id", id); t.put("epoch", epoch)
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  private def putRows(root: ObjectNode, rows: Map[String, Long]): Unit =
-    if (rows.nonEmpty) {
-      val fr = root.putObject("fileRows")
-      rows.foreach { case (f, n) => fr.put(f, n) }
-    }
-
-  private def putNulls(root: ObjectNode,
-      nulls: Map[String, Map[String, Long]]): Unit =
-    if (nulls.nonEmpty) {
-      val fn = root.putObject("fileNulls")
-      nulls.foreach { case (f, byCol) =>
-        val cn = fn.putObject(f)
-        byCol.foreach { case (c, n) => cn.put(c, n) }
-      }
-    }
-
-  private def putDvs(root: ObjectNode,
-      dvs: Map[String, Seq[CommitLog.DvRef]]): Unit =
-    if (dvs.nonEmpty) {
-      val fd = root.putObject("fileDvs")
-      dvs.foreach { case (f, refs) =>
-        val a = fd.putArray(f)
-        refs.foreach { r =>
-          val o = a.addObject(); o.put("p", r.path); o.put("n", r.count)
-        }
-      }
-    }
-
-  private def putBlooms(root: ObjectNode,
-      blooms: Map[String, Map[String, CommitLog.BloomF]]): Unit =
-    if (blooms.nonEmpty) {
-      val fb = root.putObject("fileBlooms")
-      blooms.foreach { case (f, byCol) =>
-        val cn = fb.putObject(f)
-        byCol.foreach { case (c, b) =>
-          val o = cn.putObject(c)
-          o.put("b", b.bits); o.put("k", b.k)
-          if (b.era != 0L) o.put("e", b.era) // era 0 stays byte-identical
-          val w = o.putArray("w"); b.words.foreach(w.add)
-        }
-      }
-    }
-
-  private def parseBlooms(node: JsonNode): Map[String, Map[String, CommitLog.BloomF]] =
-    Option(node.get("fileBlooms")).map(_.properties().asScala.map { e =>
-      e.getKey -> e.getValue.properties().asScala.map { ce =>
-        val o = ce.getValue
-        ce.getKey -> CommitLog.BloomF(o.get("b").asInt(), o.get("k").asInt(),
-          o.get("w").elements().asScala.map(_.asLong()).toArray,
-          Option(o.get("e")).map(_.asLong()).getOrElse(0L))
-      }.toMap
-    }.toMap).getOrElse(Map.empty)
-
   /** Atomically publish `json` as version `v`; false = version taken.
     * The atomicity lives in the [[LogStore]] (pluggable per storage
     * system — see its contract); everything above this line is
     * storage-agnostic. */
-  private def tryCommit(v: Long, json: String): Boolean = {
+  private def tryCommit(m: Manifest): Boolean = {
     fs.mkdirs(logDir)
-    logStore.putIfAbsent(fs, manifestPath(v), json)
+    logStore.putIfAbsent(fs, manifestPath(m.version), ManifestCodec.encode(m))
   }
+
+  /** The explicit spec ids a restatement of `es` must pin: every
+    * tagged file's, once the table's registry exists (a restated file
+    * must keep the spec it was written under, not default to the
+    * current one). */
+  private def specIdsOf(s: Snapshot, es: Iterable[FileEntry]): Map[String, Int] =
+    if (s.specs.isEmpty) Map.empty
+    else es.iterator.filter(_.partTag.isDefined).map(e => e.path -> e.specId).toMap
 }
 
 object CommitLog {
@@ -6078,40 +5558,113 @@ object CommitLog {
     * commit; one hour is far past any single statement's window. */
   val StagingReclaimTtlMs: Long = 60L * 60 * 1000
 
-  /** Reserved pseudo-column key carrying a file's exact row count
-    * between footer harvest and manifest serialization. DOTTED on
-    * purpose: the harvester records only dot-free (top-level) paths,
-    * so no real column's stats can ever collide with it, and
-    * [[CommitLog]]'s `manifestJson` strips it before the manifest is
-    * written — it never appears in a folded [[CommitLog.Snapshot]]'s
-    * `stats`, only in `rows`. */
-  private[sources] val RowsKey: String = "graft.rows"
+  /** One live data file and everything the log knows about it. Every
+    * fact is evidence that may be ABSENT, and absent means unknown —
+    * never zero: `rows` (the exact physical row count) is absent for
+    * files committed before row counts were harvested, and a column is
+    * missing from `nulls` (exact per-column null counts) when any chunk
+    * of it omitted numNulls. Column-keyed maps use PHYSICAL names.
+    *  - `partTag`: the partition value (string form), present only for
+    *    files written by the partitioned paths; `specId` is the index
+    *    of the registry spec the tag was written under (0 = the
+    *    create-time spec) — a tag is only meaningful under its spec;
+    *  - `colStats`: footer (min, max) per column — Long, Double,
+    *    String, [[TsUs]] or [[DecV]] values;
+    *  - `sums`: exact column sums (Long or [[DecV]]) kept by
+    *    [[CommitLog.withSumStats]]; a missing sum refuses the fold;
+    *  - `liveNonNull`: a DV'd file's post-mask non-null counts;
+    *  - `dvAcc`: the masked-row total that `sums` and `liveNonNull`
+    *    already exclude — they are live-exact iff it equals
+    *    [[maskedCount]];
+    *  - `blooms`: per-column Bloom filters ([[CommitLog.withBloomIndex]]);
+    *  - `dvs`: the deletion-vector sidecars masking the file's deleted
+    *    row positions, in commit order; a rewrite retiring the file
+    *    drops them.
+    * Inside a manifest an entry states what ONE version says about the
+    * file ([[restate]]). */
+  final case class FileEntry(path: String, partTag: Option[String] = None,
+      specId: Int = 0, rows: Option[Long] = None,
+      nulls: Map[String, Long] = Map.empty,
+      colStats: Map[String, (Any, Any)] = Map.empty,
+      sums: Map[String, Any] = Map.empty,
+      liveNonNull: Map[String, Long] = Map.empty,
+      dvAcc: Option[Long] = None,
+      blooms: Map[String, BloomF] = Map.empty,
+      dvs: Seq[DvRef] = Nil) {
+    /** Rows masked out by the DVs — EXACT: every DV find-scan reads
+      * the already-masked view, so one file's sidecar position sets
+      * are disjoint by construction and their counts sum. */
+    def maskedCount: Long = dvs.iterator.map(_.count).sum
+    /** The LIVE (post-DV) row count, when the physical count is known. */
+    def liveRows: Option[Long] = rows.map(n => math.max(0L, n - maskedCount))
+    /** True when `sums`/`liveNonNull` already exclude every masked row. */
+    def dvAccounted: Boolean = dvAcc.contains(maskedCount)
+    /** The stats block: `colStats`, `sums`, `liveNonNull`, `dvAcc`. */
+    def hasStats: Boolean = colStats.nonEmpty || sums.nonEmpty ||
+      liveNonNull.nonEmpty || dvAcc.isDefined
+    /** This entry with manifest statement `m` folded on: each fact `m`
+      * states replaces this one's (the stats block as a unit), `m`'s
+      * DVs append, and `specId` is the one the fold resolved. */
+    def restate(m: FileEntry, specId: Int): FileEntry = FileEntry(path,
+      m.partTag.orElse(partTag), specId, m.rows.orElse(rows),
+      if (m.nulls.nonEmpty) m.nulls else nulls,
+      if (m.hasStats) m.colStats else colStats,
+      if (m.hasStats) m.sums else sums,
+      if (m.hasStats) m.liveNonNull else liveNonNull,
+      if (m.hasStats) m.dvAcc else dvAcc,
+      if (m.blooms.nonEmpty) m.blooms else blooms,
+      dvs ++ m.dvs)
+  }
 
-  /** Reserved pseudo-key PREFIX for per-column exact null counts
-    * (`graft.nulls.<physical column>`) — same dotted-key collision
-    * guarantee and [[CommitLog]] `manifestJson` split as
-    * [[RowsKey]]; folded into `Snapshot.nulls`, never `stats`. */
-  private[sources] val NullsKeyPrefix: String = "graft.nulls."
+  /** The folded state of the log at one version: the live files'
+    * [[FileEntry]]s in commit order, plus table-level state.
+    * `physRetired` lists the PHYSICAL names of dropped columns — a
+    * later ADD of the same logical name must take a fresh physical
+    * name or the old files' data would silently resurrect. `specs` is
+    * the append-only registry of rendered partition specs the table has
+    * written under (empty until the first
+    * [[CommitLog.evolvePartitionSpec]] — the single-spec world). */
+  final case class Snapshot(version: Long, schema: Option[StructType],
+      txns: Map[String, Long], physRetired: Seq[String] = Nil,
+      specs: Seq[String] = Nil,
+      entries: VectorMap[String, FileEntry] = VectorMap.empty) {
+    /** The live data files, in commit order. */
+    lazy val files: Seq[String] = entries.keys.toVector
+    /** `f`'s entry; a path that is not live reads as an entry that
+      * knows nothing. */
+    def entry(f: String): FileEntry = entries.getOrElse(f, FileEntry(f))
+    def dvsOf(f: String): Seq[DvRef] = entry(f).dvs
+    /** True when some live file carries a partition tag. */
+    lazy val tagged: Boolean = entries.valuesIterator.exists(_.partTag.isDefined)
+    lazy val hasDvs: Boolean = entries.valuesIterator.exists(_.dvs.nonEmpty)
+    /** Registry index of the CURRENT spec (0 while the registry is
+      * empty — the single-spec world). */
+    def currentSpecId: Int = math.max(0, specs.size - 1)
+    /** True when every file in `fs` is tagged under the CURRENT spec —
+      * the admission every whole-table tag interpretation needs. */
+    def allCurrentSpec(fs: Seq[String]): Boolean =
+      specs.isEmpty || fs.forall(f => entry(f).specId == currentSpecId)
+  }
 
-  /** Reserved pseudo-key PREFIX for per-file EXACT column sums (r16,
-    * `graft.sum.<physical column>`) — same dotted-key collision
-    * guarantee as [[RowsKey]], but NOT split out of the stats channel:
-    * sum entries ride `fileStats` end-to-end (serialization, snapshot
-    * fold, checkpoint restatement, rewrite carry, clone, restore) with
-    * zero extra plumbing. Values are Long (integral columns) or
-    * [[DecV]] (decimal columns); absence refuses the SUM/AVG fold. */
-  private[sources] val SumKeyPrefix: String = "graft.sum."
-
-  /** Reserved pseudo-key PREFIX for a DV'd file's LIVE NON-NULL count
-    * of a sum-maintained column (`graft.nn.<physical column>`, Long) —
-    * written only by the DV sum-delta accounting (r17): the file's
-    * pre-mask `fileNulls` channel stays untouched (it means "nulls in
-    * the physical file" everywhere), and this entry carries the
-    * post-mask COUNT(col) the fold needs. Present iff the file's DV
-    * accounting is current ([[SumDvKey]]). NOT a prefix of, or
-    * prefixed by, [[SumKeyPrefix]]/[[NullsKeyPrefix]] — the derived
-    * sum-config scan strips `graft.sum.` and must never see these. */
-  private[sources] val SumNPrefix: String = "graft.nn."
+  /** One manifest — what a single version of the log states. `files`
+    * are the files the action adds (for `replace`, the whole live set);
+    * `entries` hold what this version says about individual files,
+    * new or already live. `retiredParts` names the partitions a
+    * `replace_parts` retires; `specs` restates the spec registry and
+    * `specIds` pins files' spec ids (restatements only). A checkpoint
+    * restates the full folded `txns` table. Encoded and decoded only
+    * by [[ManifestCodec]]. */
+  private[sources] final case class Manifest(version: Long, action: String,
+      files: Seq[String] = Nil, entries: Seq[FileEntry] = Nil,
+      schema: Option[StructType] = None,
+      txn: Option[(String, Long)] = None,
+      retiredParts: Seq[String] = Nil,
+      specs: Option[Seq[String]] = None,
+      specIds: Map[String, Int] = Map.empty,
+      physRetired: Option[Seq[String]] = None,
+      checkpoint: Boolean = false,
+      txns: Map[String, Long] = Map.empty,
+      ts: Option[Long] = None)
 
   /** r18 CDC ROW LINEAGE: the hidden physical column a merge-on-read
     * UPDATE writes into its replacement files — the PRE-image row's
@@ -6122,16 +5675,6 @@ object CommitLog {
     * `update_preimage`/`update_postimage` pairs instead of an
     * unlinked delete+insert. */
   private[sources] val RowLineageCol: String = "__graft_src"
-
-  /** Reserved pseudo-key: the TOTAL masked-row count of this file whose
-    * contributions its `graft.sum.*`/`graft.nn.*` entries already
-    * EXCLUDE (Long, cumulative across DV commits). The fold admits a
-    * DV'd file's sum evidence iff this equals the file's live DV
-    * cardinality — a DV committed by a non-accounting writer (or with
-    * `spark.graft.dv.sumDeltas.enabled=false`) leaves the counts
-    * unequal and the fold refuses to a correct scan, exactly the r16
-    * behavior. */
-  private[sources] val SumDvKey: String = "graft.dvacc"
 
   /** StructField metadata key carrying a column's stable PHYSICAL
     * (in-file) name — the column-mapping anchor behind
@@ -6243,7 +5786,7 @@ object CommitLog {
     * (version numbers restart, so "the manifest file for my version
     * exists" alone would accept a different table's log). */
   private[sources] final case class SnapEntry(
-      mtime: Long, len: Long, snap: CommitLog#Snapshot)
+      mtime: Long, len: Long, snap: Snapshot)
 
   /** Process-wide INCREMENTAL snapshot-fold cache (r19): versioned
     * manifests are publish-once ([[LogStore.putIfAbsent]] — never
@@ -6290,7 +5833,7 @@ object CommitLog {
 
   /** Statuses for `absPaths`, cache-first; misses are independent
     * metadata round-trips fetched concurrently on [[statusIoPool]]
-    * (the [[statsFor]] discipline — ~max latency, not the sum, on
+    * (the [[entriesFor]] discipline — ~max latency, not the sum, on
     * remote stores), with a finite deadline so one hung metadata call
     * fails the query with the paths named instead of stalling planning
     * forever. An external (shallow-clone) entry may carry its own
@@ -6626,5 +6169,224 @@ object CommitLog {
   def exists(spark: SparkSession, tableRoot: String): Boolean = {
     val p = new Path(tableRoot, "_graft_log")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+}
+
+/** The commit log's on-disk format: the one module that maps a
+  * [[CommitLog.Manifest]] to and from its JSON file, and reads every log
+  * file ([[readJson]]). One manifest:
+  * {{{
+  *   {version, action, ts, checkpoint?, files: [f],
+  *    parts?: [retired partition], partSpecs?: [spec], fileSpecs?: {f: id},
+  *    fileParts?: {f: tag}, fileRows?: {f: n}, fileNulls?: {f: {col: n}},
+  *    fileStats?: {f: {col: {t, mn, mx, sc?}}},
+  *    fileBlooms?: {f: {col: {b, k, e?, w: [word]}}},
+  *    fileDvs?: {f: [{p, n}]},
+  *    schema?, physRetired?: [phys], txn?: {id, epoch}, txns?: {id: epoch}}
+  * }}}
+  * Each per-file map lists only the files that have the fact. An
+  * entry's sums, live non-null counts and DV accounting share
+  * `fileStats` with the column min/max under reserved DOTTED keys —
+  * `graft.sum.<col>`, `graft.nn.<col>` and `graft.dvacc`, each a
+  * (v, v) pair — which no real column can shadow: footer stats are
+  * harvested for dot-free (top-level) paths only. */
+private[sources] object ManifestCodec {
+  import CommitLog.{BloomF, DecV, DvRef, FileEntry, Manifest, TsUs}
+
+  private val SumKeyPrefix = "graft.sum."
+  private val SumNPrefix = "graft.nn."
+  private val SumDvKey = "graft.dvacc"
+
+  private val mapper = new ObjectMapper()
+
+  /** The single reader: one log file (manifest or checkpoint hint),
+    * parsed whole. */
+  def readJson(fs: org.apache.hadoop.fs.FileSystem, p: Path): JsonNode = {
+    val in = fs.open(p)
+    try mapper.readTree(in) finally in.close()
+  }
+
+  def read(fs: org.apache.hadoop.fs.FileSystem, p: Path): Manifest =
+    decode(readJson(fs, p))
+
+  /** The `_last_checkpoint` hint naming checkpoint version `v`. */
+  def hint(v: Long): String = s"""{"version":$v}"""
+
+  def hintVersion(fs: org.apache.hadoop.fs.FileSystem, p: Path): Long =
+    readJson(fs, p).get("version").asLong()
+
+  /** `m` as manifest JSON, stamped with the writer's clock (`ts`,
+    * what timestamp time travel resolves against). */
+  def encode(m: Manifest): String = {
+    val root = mapper.createObjectNode()
+    root.put("version", m.version)
+    root.put("action", m.action)
+    if (m.checkpoint) root.put("checkpoint", true)
+    root.put("ts", System.currentTimeMillis())
+    val fa = root.putArray("files")
+    m.files.foreach(fa.add)
+    if (m.retiredParts.nonEmpty) {
+      val pa = root.putArray("parts"); m.retiredParts.foreach(pa.add)
+    }
+    m.specs.foreach { ss =>
+      val pa = root.putArray("partSpecs"); ss.foreach(pa.add)
+    }
+    // a checkpoint of an evolved table restates the ids even when no
+    // file is tagged
+    if (m.specIds.nonEmpty || (m.checkpoint && m.specs.isDefined)) {
+      val o = root.putObject("fileSpecs")
+      m.specIds.foreach { case (f, i) => o.put(f, i) }
+    }
+    def section[A](name: String, facts: Seq[(String, A)])(
+        put: (ObjectNode, String, A) => Unit): Unit =
+      if (facts.nonEmpty) {
+        val o = root.putObject(name)
+        facts.foreach { case (f, a) => put(o, f, a) }
+      }
+    val es = m.entries
+    section("fileParts", es.flatMap(e => e.partTag.map(e.path -> _)))(
+      (o, f, p) => o.put(f, p))
+    section("fileStats", es.filter(_.hasStats).map(e => e.path -> e))(
+      (o, f, e) => putStats(o.putObject(f), e))
+    section("fileRows", es.flatMap(e => e.rows.map(e.path -> _)))(
+      (o, f, n) => o.put(f, n))
+    section("fileNulls", es.filter(_.nulls.nonEmpty).map(e => e.path -> e.nulls)) {
+      (o, f, ns) =>
+        val c = o.putObject(f)
+        ns.foreach { case (col, n) => c.put(col, n) }
+    }
+    section("fileBlooms", es.filter(_.blooms.nonEmpty).map(e => e.path -> e.blooms)) {
+      (o, f, bs) =>
+        val c = o.putObject(f)
+        bs.foreach { case (col, b) =>
+          val bo = c.putObject(col)
+          bo.put("b", b.bits); bo.put("k", b.k)
+          if (b.era != 0L) bo.put("e", b.era) // era 0 is written as absent
+          val w = bo.putArray("w"); b.words.foreach(w.add)
+        }
+    }
+    section("fileDvs", es.filter(_.dvs.nonEmpty).map(e => e.path -> e.dvs)) {
+      (o, f, refs) =>
+        val a = o.putArray(f)
+        refs.foreach { r =>
+          val ro = a.addObject(); ro.put("p", r.path); ro.put("n", r.count)
+        }
+    }
+    m.schema.foreach(s => root.put("schema", s.json))
+    m.physRetired.foreach { r =>
+      val pr = root.putArray("physRetired"); r.foreach(pr.add)
+    }
+    m.txn.foreach { case (id, epoch) =>
+      val t = root.putObject("txn"); t.put("id", id); t.put("epoch", epoch)
+    }
+    if (m.checkpoint) {
+      val tn = root.putObject("txns")
+      m.txns.foreach { case (id, epoch) => tn.put(id, epoch) }
+    }
+    mapper.writeValueAsString(root)
+  }
+
+  private def putStats(o: ObjectNode, e: FileEntry): Unit = {
+    e.colStats.foreach { case (c, (mn, mx)) => putStat(o, c, mn, mx) }
+    e.sums.foreach { case (c, v) => putStat(o, SumKeyPrefix + c, v, v) }
+    e.liveNonNull.foreach { case (c, n) => putStat(o, SumNPrefix + c, n, n) }
+    e.dvAcc.foreach(n => putStat(o, SumDvKey, n, n))
+  }
+
+  /** One typed (min, max) pair; a pair no tag can restate (mixed
+    * representations, or decimals of two scales) is written empty and
+    * reads back as absent. */
+  private def putStat(o: ObjectNode, key: String, mn: Any, mx: Any): Unit = {
+    val s = o.putObject(key)
+    (mn, mx) match {
+      case (TsUs(a), TsUs(b)) =>
+        s.put("t", "ts"); s.put("mn", a); s.put("mx", b)
+      case (a: DecV, b: DecV) if a.scale == b.scale =>
+        s.put("t", "dec"); s.put("sc", a.scale)
+        s.put("mn", a.unscaled); s.put("mx", b.unscaled)
+      case (a: Long, b: Long)     => s.put("t", "l"); s.put("mn", a); s.put("mx", b)
+      case (a: Double, b: Double) => s.put("t", "d"); s.put("mn", a); s.put("mx", b)
+      case (a: String, b: String) => s.put("t", "s"); s.put("mn", a); s.put("mx", b)
+      case _ => ()
+    }
+  }
+
+  private def getStat(o: JsonNode): Option[(Any, Any)] =
+    Option(o.get("t")).map(_.asText()) match {
+      case Some("ts") => Some((TsUs(o.get("mn").asLong()), TsUs(o.get("mx").asLong())))
+      case Some("dec") if o.has("sc") =>
+        val sc = o.get("sc").asInt()
+        Some((DecV(o.get("mn").asLong(), sc), DecV(o.get("mx").asLong(), sc)))
+      case Some("l") => Some((o.get("mn").asLong(), o.get("mx").asLong()))
+      case Some("d") => Some((o.get("mn").asDouble(), o.get("mx").asDouble()))
+      case Some("s") => Some((o.get("mn").asText(), o.get("mx").asText()))
+      case _ => None
+    }
+
+  def decode(n: JsonNode): Manifest = {
+    def strs(k: String): Option[Vector[String]] =
+      Option(n.get(k)).map(_.elements().asScala.map(_.asText()).toVector)
+    def props(node: JsonNode): Iterator[(String, JsonNode)] =
+      node.properties().asScala.iterator.map(e => e.getKey -> e.getValue)
+    def section(k: String): Iterator[(String, JsonNode)] =
+      Option(n.get(k)).iterator.flatMap(props)
+    val files = strs("files").getOrElse(Vector.empty)
+    // one entry per file the manifest mentions: `files` first, in order
+    val es = scala.collection.mutable.LinkedHashMap.empty[String, FileEntry]
+    files.foreach(f => es.getOrElseUpdate(f, FileEntry(f)))
+    def upd(f: String)(g: FileEntry => FileEntry): Unit =
+      es.update(f, g(es.getOrElse(f, FileEntry(f))))
+    section("fileParts").foreach { case (f, v) =>
+      upd(f)(_.copy(partTag = Some(v.asText()))) }
+    section("fileRows").foreach { case (f, v) =>
+      upd(f)(_.copy(rows = Some(v.asLong()))) }
+    section("fileNulls").foreach { case (f, v) =>
+      upd(f)(_.copy(nulls = props(v).map { case (c, x) => c -> x.asLong() }.toMap)) }
+    section("fileStats").foreach { case (f, v) =>
+      var e = es.getOrElse(f, FileEntry(f))
+      props(v).foreach { case (k, o) =>
+        getStat(o).foreach { case pair @ (mn, _) =>
+          if (k.startsWith(SumKeyPrefix))
+            e = e.copy(sums = e.sums.updated(k.drop(SumKeyPrefix.length), mn))
+          else if (k.startsWith(SumNPrefix)) mn match {
+            case c: Long => e = e.copy(liveNonNull =
+              e.liveNonNull.updated(k.drop(SumNPrefix.length), c))
+            case _ => ()
+          }
+          else if (k == SumDvKey) mn match {
+            case c: Long => e = e.copy(dvAcc = Some(c))
+            case _ => ()
+          }
+          else e = e.copy(colStats = e.colStats.updated(k, pair))
+        }
+      }
+      es.update(f, e)
+    }
+    section("fileBlooms").foreach { case (f, v) =>
+      upd(f)(_.copy(blooms = props(v).map { case (c, o) =>
+        c -> BloomF(o.get("b").asInt(), o.get("k").asInt(),
+          o.get("w").elements().asScala.map(_.asLong()).toArray,
+          Option(o.get("e")).map(_.asLong()).getOrElse(0L))
+      }.toMap))
+    }
+    section("fileDvs").foreach { case (f, v) =>
+      upd(f)(_.copy(dvs = v.elements().asScala.map(r =>
+        DvRef(r.get("p").asText(), r.get("n").asLong())).toVector))
+    }
+    Manifest(
+      version = n.get("version").asLong(),
+      action = n.get("action").asText(),
+      files = files,
+      entries = es.values.toVector,
+      schema = Option(n.get("schema")).map(s =>
+        DataType.fromJson(s.asText()).asInstanceOf[StructType]),
+      txn = Option(n.get("txn")).map(t => t.get("id").asText() -> t.get("epoch").asLong()),
+      retiredParts = strs("parts").getOrElse(Vector.empty),
+      specs = strs("partSpecs"),
+      specIds = section("fileSpecs").map { case (f, v) => f -> v.asInt() }.toMap,
+      physRetired = strs("physRetired"),
+      checkpoint = Option(n.get("checkpoint")).exists(_.asBoolean()),
+      txns = section("txns").map { case (id, v) => id -> v.asLong() }.toMap,
+      ts = Option(n.get("ts")).map(_.asLong()))
   }
 }

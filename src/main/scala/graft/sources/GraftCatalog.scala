@@ -1070,7 +1070,7 @@ private[sources] final class GraftLogScanBuilder(
   // re-evaluates the returned residual filters above the scan, so the
   // cost is row-group skipping on DV'd tables only — transient until
   // OPTIMIZE (or any rewrite) purges the vectors.
-  private val dvActive: Boolean = snap.dvs.nonEmpty
+  private val dvActive: Boolean = snap.hasDvs
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     // manifest-level FILE skipping happens here, before the parquet
@@ -1153,7 +1153,7 @@ private[sources] final class GraftLogScanBuilder(
     val sp = effectivePartCol
       .flatMap(p => scala.util.Try(PartSpec.parse(p)).toOption)
       .getOrElse(return false)
-    if (selectedFiles.isEmpty || !selectedFiles.forall(snap.parts.contains))
+    if (selectedFiles.isEmpty || !selectedFiles.forall(snap.entry(_).partTag.isDefined))
       return false
     // r18: each file decodes (and judges) under ITS OWN spec — an
     // evolved table's older files carry tags of the spec that wrote
@@ -1165,12 +1165,12 @@ private[sources] final class GraftLogScanBuilder(
         val parsed: Map[Int, Option[PartSpec]] =
           snap.specs.indices.map(i => i ->
             scala.util.Try(PartSpec.parse(snap.specs(i))).toOption).toMap
-        (f: String) => parsed.getOrElse(snap.specIdOf(f), None)
+        (f: String) => parsed.getOrElse(snap.entry(f).specId, None)
       }
     lazy val decoded: Seq[(PartSpec, Seq[String])] = scala.util.Try(
       selectedFiles.map { f =>
         val fsp = specOfFile(f).getOrElse(return false)
-        (fsp, fsp.decode(snap.parts(f)))
+        (fsp, fsp.decode(snap.entry(f).partTag.get))
       }).getOrElse(return false)
     def keyIdx(a: Attribute): Option[Int] = sp.keyIndexOf(a.name)
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -1312,8 +1312,8 @@ private[sources] final class GraftLogScanBuilder(
   // ── r14: MANIFEST-ANSWERED AGGREGATE PUSHDOWN ──────────────────────
   // A global COUNT(*) / MIN / MAX over a logged table is answerable
   // from the manifest alone — per-file exact row counts (r14,
-  // `Snapshot.rows`, DV-adjusted) and per-file exact footer min/max
-  // (`Snapshot.stats`) fold on the driver, and the built scan is a
+  // `FileEntry.rows`, DV-adjusted) and per-file exact footer min/max
+  // (`FileEntry.colStats`) fold on the driver, and the built scan is a
   // [[org.apache.spark.sql.connector.read.LocalScan]] holding ONE row:
   // at 100 TB the query reads ZERO data files (the manifest replaces
   // the reference's DynamoDB item counts, /root/reference/index.js:305-314).
@@ -1577,7 +1577,7 @@ private[sources] final class GraftLogScanBuilder(
       case _ => return None
     }
     val files = selectedFiles
-    if (groupKeys.nonEmpty && !files.forall(snap.parts.contains)) return None
+    if (groupKeys.nonEmpty && !files.forall(snap.entry(_).partTag.isDefined)) return None
     // r18: tag-derived groups need ONE tag namespace — a mid-evolution
     // mixed-spec file set refuses the fold (normal scan, correct)
     if (groupKeys.nonEmpty && !snap.allCurrentSpec(files)) return None
@@ -1590,22 +1590,22 @@ private[sources] final class GraftLogScanBuilder(
       if (groupKeys.isEmpty) Seq((Nil, files))
       else scala.util.Try {
         files.groupBy { f =>
-          val comps = spec.get.decode(snap.parts(f))
+          val comps = spec.get.decode(snap.entry(f).partTag.get)
           groupKeys.map(gk => gk.fromTag(comps(gk.idx)))
         }.toSeq.sortBy(_._1.map(String.valueOf(_: Any)).mkString("/"))
           .map { case (k, fs) => (k, fs) }
       }.getOrElse(return None)
 
     def liveCount(fs: Seq[String]): Option[Long] =
-      if (fs.forall(snap.rows.contains))
-        Some(fs.iterator.map(f => snap.liveRowCount(f).get).sum)
+      if (fs.forall(snap.entry(_).rows.isDefined))
+        Some(fs.iterator.map(f => snap.entry(f).liveRows.get).sum)
       else None
     def extremum(fs: Seq[String], f: StructField, isMin: Boolean)
         : Option[Any] = {
       val phys = CommitLog.physNameOf(f)
       var acc: Any = null
       fs.foreach { fl =>
-        snap.stats.get(fl).flatMap(_.get(phys)) match {
+        snap.entry(fl).colStats.get(phys) match {
           case Some((mn, mx)) =>
             val v = if (isMin) mn else mx
             acc = if (acc == null) v
@@ -1614,7 +1614,7 @@ private[sources] final class GraftLogScanBuilder(
             // only a provably-EMPTY file may lack the stat: an all-null
             // or pre-column or stats-poisoned file is indistinguishable
             // from unknown content here, so it refuses the pushdown
-            if (!snap.rows.get(fl).contains(0L)) return None
+            if (!snap.entry(fl).rows.contains(0L)) return None
         }
       }
       if (acc == null) Some(null)
@@ -1624,17 +1624,11 @@ private[sources] final class GraftLogScanBuilder(
     // r17: a DV'd file's sum evidence (the restated live partials, the
     // live non-null counts) is admissible iff its accounting is
     // CURRENT — the cumulative masked total its entries exclude
-    // ([[CommitLog.SumDvKey]]) equals its live DV cardinality. A DV a
-    // non-accounting writer committed leaves them unequal → refuse.
-    def dvTotal(fl: String): Long =
-      snap.dvs.getOrElse(fl, Nil).iterator.map(_.count).sum
-    def dvAccounted(fl: String): Boolean = {
-      val t = dvTotal(fl)
-      t == 0L || snap.stats.get(fl).flatMap(_.get(CommitLog.SumDvKey)).exists {
-        case (n: Long, _) => n == t
-        case _ => false
-      }
-    }
+    // ([[CommitLog.FileEntry.dvAcc]]) equals its live DV cardinality.
+    // A DV a non-accounting writer committed leaves them unequal →
+    // refuse.
+    def dvUnaccounted(e: CommitLog.FileEntry): Boolean =
+      e.maskedCount > 0L && !e.dvAccounted
 
     // COUNT(col) = Σ(rows − nulls(col)) per file; unknown null counts
     // refuse, provably-empty files contribute zero. A DV'd file (r17)
@@ -1644,23 +1638,24 @@ private[sources] final class GraftLogScanBuilder(
     def countCol(fs: Seq[String], phys: String): Option[Long] = {
       var total = 0L
       fs.foreach { fl =>
-        def preMaskZero: Boolean = snap.rows.get(fl).contains(0L) ||
-          ((snap.rows.get(fl), snap.nulls.get(fl).flatMap(_.get(phys))) match {
+        val e = snap.entry(fl)
+        def preMaskZero: Boolean = e.rows.contains(0L) ||
+          ((e.rows, e.nulls.get(phys)) match {
             case (Some(r), Some(n)) => n == r
             case _ => false
           })
-        if (dvTotal(fl) > 0L) {
-          if (!dvAccounted(fl)) return None
-          snap.stats.get(fl).flatMap(_.get(CommitLog.SumNPrefix + phys)) match {
-            case Some((n: Long, _)) => total += n
-            case _ => if (!preMaskZero) return None
+        if (e.maskedCount > 0L) {
+          if (dvUnaccounted(e)) return None
+          e.liveNonNull.get(phys) match {
+            case Some(n) => total += n
+            case None => if (!preMaskZero) return None
           }
-        } else snap.nulls.get(fl).flatMap(_.get(phys)) match {
-          case Some(n) => snap.rows.get(fl) match {
+        } else e.nulls.get(phys) match {
+          case Some(n) => e.rows match {
             case Some(r) => total += r - n
             case None => return None
           }
-          case None => if (!snap.rows.get(fl).contains(0L)) return None
+          case None => if (!e.rows.contains(0L)) return None
         }
       }
       Some(total)
@@ -1732,16 +1727,16 @@ private[sources] final class GraftLogScanBuilder(
     // (a 0-row or fully-masked partition must not count)
     if (resolved.exists(_.isInstanceOf[FnDistinctKey])
         && !(files.forall(f =>
-          snap.parts.contains(f) && snap.rows.contains(f))
+          snap.entry(f).partTag.isDefined && snap.entry(f).rows.isDefined)
           && snap.allCurrentSpec(files))) return None
     // a DV could mask any file's extremal row — min/max never answers
     // from pre-mask footer stats. SUM/AVG/COUNT(col) stopped refusing
     // blanketly in r17: their per-file admission checks each DV'd
-    // file's sum-delta accounting ([[dvAccounted]]) instead — current
+    // file's sum-delta accounting ([[dvUnaccounted]]) instead — current
     // accounting means the entries ARE the live values; anything else
     // still refuses to a correct scan.
     if (resolved.exists(_.isInstanceOf[FnExtremum])
-        && files.exists(snap.dvs.contains)) return None
+        && files.exists(snap.dvsOf(_).nonEmpty)) return None
 
     // r16: Σ per-file exact partials, in BigDecimal (never rounds).
     // Admissible absence of a file's partial: the file is provably
@@ -1750,26 +1745,23 @@ private[sources] final class GraftLogScanBuilder(
     def sumBig(fs: Seq[String], f: StructField)
         : Option[java.math.BigDecimal] = {
       val phys = CommitLog.physNameOf(f)
-      val key = CommitLog.SumKeyPrefix + phys
       var acc = java.math.BigDecimal.ZERO
       fs.foreach { fl =>
+        val e = snap.entry(fl)
         // r17: a DV'd file's partial is its LIVE sum when — and only
         // when — the DV commit's delta accounting is current; an
         // unaccounted DV refuses exactly as before
-        if (dvTotal(fl) > 0L && !dvAccounted(fl)) return None
-        snap.stats.get(fl).flatMap(_.get(key)) match {
-          case Some((v, _)) => v match {
-            case l: Long => acc = acc.add(java.math.BigDecimal.valueOf(l))
-            case d: CommitLog.DecV => acc = acc.add(d.toBig)
-            case _ => return None
-          }
+        if (dvUnaccounted(e)) return None
+        e.sums.get(phys) match {
+          case Some(l: Long) => acc = acc.add(java.math.BigDecimal.valueOf(l))
+          case Some(d: CommitLog.DecV) => acc = acc.add(d.toBig)
+          case Some(_) => return None
           case None =>
-            val allNull = (snap.rows.get(fl),
-                snap.nulls.get(fl).flatMap(_.get(phys))) match {
+            val allNull = (e.rows, e.nulls.get(phys)) match {
               case (Some(r), Some(n)) => n == r
               case _ => false
             }
-            if (!(snap.rows.get(fl).contains(0L) || allNull)) return None
+            if (!(e.rows.contains(0L) || allNull)) return None
         }
       }
       Some(acc)
@@ -1890,9 +1882,9 @@ private[sources] final class GraftLogScanBuilder(
             extremum(fs, f, isMin).getOrElse(return None)
           case FnDistinctKey(_, i) =>
             val n = scala.util.Try {
-              fs.groupBy(fl => spec.get.decode(snap.parts(fl))(i))
+              fs.groupBy(fl => spec.get.decode(snap.entry(fl).partTag.get)(i))
                 .count { case (_, pf) =>
-                  pf.exists(fl => snap.liveRowCount(fl).exists(_ > 0L)) }
+                  pf.exists(fl => snap.entry(fl).liveRows.exists(_ > 0L)) }
             }.getOrElse(return None)
             java.lang.Long.valueOf(n.toLong)
           case FnSum(f) => sumValue(fs, f).getOrElse(return None)
@@ -1925,7 +1917,7 @@ private[sources] final class GraftLogScanBuilder(
     val it = selectedFiles.iterator
     while (it.hasNext && acc < limit) {
       val f = it.next(); n += 1
-      snap.liveRowCount(f).foreach(acc += _)
+      snap.entry(f).liveRows.foreach(acc += _)
     }
     if (acc < limit || n >= selectedFiles.size) return false
     selectedFiles = selectedFiles.take(n)
@@ -2007,12 +1999,12 @@ private[sources] final class GraftLogScanBuilder(
     final case class Ev(file: String, mn: Any, mx: Any, hasStat: Boolean,
         live: Option[Long], nulls: Option[Long], masked: Long)
     val evs: Seq[Ev] = selectedFiles.map { fl =>
-      val st = snap.stats.get(fl).flatMap(_.get(phys)).filter {
+      val e = snap.entry(fl)
+      val st = e.colStats.get(phys).filter {
         case (mn, mx) => statRepr(mn) && statRepr(mx)
       }
       Ev(fl, st.map(_._1).orNull, st.map(_._2).orNull, st.isDefined,
-        snap.liveRowCount(fl), snap.nulls.get(fl).flatMap(_.get(phys)),
-        snap.maskedCount(fl))
+        e.liveRows, e.nulls.get(phys), e.maskedCount)
     }
     // lower bound on the non-null rows a file will emit
     def useful(e: Ev): Long = (e.live, e.nulls) match {
@@ -2083,8 +2075,8 @@ private[sources] final class GraftLogScanBuilder(
     // manifest-exact output cardinality: valid only when no pushed
     // filter can make the scan emit fewer rows than its files hold
     val exactRows: Option[Long] =
-      if (filtersWerePushed || !selectedFiles.forall(snap.rows.contains)) None
-      else Some(selectedFiles.iterator.map(f => snap.liveRowCount(f).get).sum)
+      if (filtersWerePushed || !selectedFiles.forall(snap.entry(_).rows.isDefined)) None
+      else Some(selectedFiles.iterator.map(f => snap.entry(f).liveRows.get).sum)
     (spjInfo, rtInfo, dvInfo) match {
       case (None, None, None) => base
       case (spj, rt, dv) =>
@@ -2099,13 +2091,13 @@ private[sources] final class GraftLogScanBuilder(
     * process-wide immutable cache at reader-factory time. */
   private def dvInfo: Option[GraftLogScanBuilder.DvInfo] = {
     if (!dvActive) return None
-    val sel = selectedFiles.filter(snap.dvs.contains)
+    val sel = selectedFiles.filter(snap.dvsOf(_).nonEmpty)
     if (sel.isEmpty) None
     else {
       val refs: Map[String, Seq[String]] = sel.map(f =>
-        baseName(f) -> snap.dvs(f).map(_.path)).toMap
+        baseName(f) -> snap.dvsOf(f).map(_.path)).toMap
       Some(GraftLogScanBuilder.DvInfo(refs, snap.version)(
-        () => log.dvPositions(snap.dvs, sel)))
+        () => log.dvPositions(snap.dvsOf, sel)))
     }
   }
 
@@ -2161,7 +2153,7 @@ private[sources] final class GraftLogScanBuilder(
         }
         if (resolved.forall(_.isDefined)
             && selectedFiles.nonEmpty
-            && selectedFiles.forall(snap.parts.contains)
+            && selectedFiles.forall(snap.entry(_).partTag.isDefined)
             // r18: SPJ reports ONE grouping for the whole scan — on a
             // mixed-spec (mid-evolution) table the tags are not one
             // keyspace, so refuse the report (Spark plans the ordinary
@@ -2171,7 +2163,7 @@ private[sources] final class GraftLogScanBuilder(
             && prunedSchema.forall(ps => sp.sourceColumns.forall(c =>
               ps.fields.exists(pf => lcn(pf.name) == lcn(c))))) {
           val keyByName: Map[String, String] = selectedFiles.map { rel =>
-            baseName(rel) -> snap.parts(rel)
+            baseName(rel) -> snap.entry(rel).partTag.get
           }.toMap
           Some(GraftLogScanBuilder.SpjInfo(resolved.flatten, sp, keyByName,
             keyByName.values.toSet.size))
@@ -2205,8 +2197,10 @@ private[sources] final class GraftLogScanBuilder(
     if (!boolConf("spark.graft.runtimeFiltering.enabled", default = true)) return None
     val rtSpec: Option[PartSpec] = effectivePartCol
       .flatMap(s => scala.util.Try(PartSpec.parse(s)).toOption)
-    val statCols: Set[String] = snap.stats.valuesIterator.flatMap(_.keysIterator).toSet
-    val bloomCols: Set[String] = snap.blooms.valuesIterator.flatMap(_.keysIterator).toSet
+    val statCols: Set[String] =
+      snap.entries.valuesIterator.flatMap(_.colStats.keysIterator).toSet
+    val bloomCols: Set[String] =
+      snap.entries.valuesIterator.flatMap(_.blooms.keysIterator).toSet
     def atomic(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: StructType => false
       case _: org.apache.spark.sql.types.ArrayType => false
@@ -2275,7 +2269,7 @@ private[sources] object GraftLogScanBuilder {
   /** The driver-local result of a manifest-answered aggregate
     * pushdown (r14): COUNT(*)/MIN/MAX (one row globally, one per
     * partition group under a pushed GROUP BY) folded from
-    * `Snapshot.rows` / `Snapshot.stats` — planned as a
+    * `FileEntry.rows` / `FileEntry.colStats` — planned as a
     * LocalTableScan, zero data files opened. Values are Spark
     * INTERNAL representations, positionally aligned with `out`. */
   private[sources] final case class ManifestAggScan(out: StructType,

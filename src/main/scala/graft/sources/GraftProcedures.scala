@@ -235,14 +235,14 @@ private[sources] object GraftProcedures {
           val mapped = s.schema.exists(sch => sch.fields.exists(f =>
             f.metadata.contains(CommitLog.PhysKey)
               || !CommitLog.identityType(f.dataType)))
-          val dvSidecars = s.dvs.valuesIterator.flatten.map(_.path).toSet.size
-          val maskedRows = s.dvs.valuesIterator.flatten.map(_.count).sum
+          val es = s.entries.values
+          val dvSidecars = es.flatMap(_.dvs.map(_.path)).toSet.size
+          val maskedRows = es.iterator.map(_.maskedCount).sum
           // r14: the manifest's exact LIVE row count (footer-harvested
           // per-file counts minus DV cardinalities); null when any
           // live file predates row-count harvesting
           val numRows: Any =
-            if (s.files.forall(s.rows.contains))
-              s.files.iterator.map(f => s.liveRowCount(f).get).sum
+            if (es.forall(_.rows.isDefined)) es.iterator.map(_.liveRows.get).sum
             else null
           // r18: the partition-spec registry ("d0;d1;…" in id order —
           // last = current) and how many live files still carry tags
@@ -251,8 +251,8 @@ private[sources] object GraftProcedures {
             else org.apache.spark.unsafe.types.UTF8String
               .fromString(s.specs.mkString(";"))
           val staleSpecFiles = if (s.specs.isEmpty) 0L
-            else s.files.count(f => s.parts.contains(f)
-              && s.specIdOf(f) != s.currentSpecId).toLong
+            else es.count(e => e.partTag.isDefined
+              && e.specId != s.currentSpecId).toLong
           resultScan(StructType(Seq(
             StructField("version", LongType),
             StructField("num_files", LongType),
@@ -267,7 +267,7 @@ private[sources] object GraftProcedures {
             StructField("num_stale_spec_files", LongType))),
             Seq(new GenericInternalRow(Array[Any](
               s.version, s.files.size.toLong, numRows, bytes,
-              s.parts.values.toSet.size.toLong, mapped,
+              es.flatMap(_.partTag).toSet.size.toLong, mapped,
               s.physRetired.size.toLong, dvSidecars.toLong, maskedRows,
               specReg, staleSpecFiles))))
         })

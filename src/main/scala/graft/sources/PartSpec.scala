@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * unit a write retires and a storage-partitioned join co-locates.
   *
   * The manifest model is UNCHANGED: one string tag per data file
-  * ([[CommitLog.Snapshot.parts]]). What generalizes is the tag's
+  * ([[CommitLog.FileEntry.partTag]]). What generalizes is the tag's
   * derivation and decoding:
   *
   *  - single identity key (every pre-r13 table): tag = the value's own

@@ -117,14 +117,14 @@ class AnnIndexSpec extends SparkSpecBase {
     assert(goneIds.nonEmpty)
     val gone = col("vec_id").isInCollection(goneIds)
     val s0 = postings0.snapshot()
-    val otherCellFiles = s0.files.filter(f => s0.parts(f) != victimCell.toString).toSet
+    val otherCellFiles = s0.files.filter(f => s0.entry(f).partTag.get != victimCell.toString).toSet
     Similarity.deleteFromIvfPqIndex(spark, rootDel,
       emb.filter(gone).select($"vec_id"), "vec_id")
     // only the victim cell's files rewrote
     val sAfter = postings0.snapshot()
     assert(otherCellFiles.subsetOf(sAfter.files.toSet),
       "untouched cells' files must survive the delete")
-    assert(sAfter.files.forall(sAfter.parts.contains), "cell tags survive")
+    assert(sAfter.files.forall(sAfter.entry(_).partTag.isDefined), "cell tags survive")
     // no deleted id remains in the postings
     assert(postings0.read()
       .filter($"c_id".isInCollection(goneIds)).count() === 0L)

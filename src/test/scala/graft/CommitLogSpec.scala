@@ -257,9 +257,9 @@ class CommitLogSpec extends SparkSpecBase {
     // counts == the actual masked read, after EVERY commit kind
     def check(l: CommitLog = log, what: String = ""): Unit = {
       val s = l.snapshot()
-      assert(s.files.forall(s.rows.contains),
+      assert(s.files.forall(s.entry(_).rows.isDefined),
         s"$what: a live file lost its row count")
-      val live = s.files.map(f => s.liveRowCount(f).get).sum
+      val live = s.files.map(f => s.entry(f).liveRows.get).sum
       assert(live === l.read().count(), s"$what: manifest live-count drift")
     }
     def block(base: Long, n: Int) = (0 until n).map(i =>
@@ -418,12 +418,12 @@ class CommitLogSpec extends SparkSpecBase {
       .tableProperty("merge.partcol", "day")
       .create()
     val before = CommitLog(spark, s"$wh/prices").snapshot()
-    val d1 = before.files.filter(f => before.parts(f) == "d1").toSet
+    val d1 = before.files.filter(f => before.entry(f).partTag.get == "d1").toSet
     assert(d1.nonEmpty)
     Seq((3L, "d2", "c")).toDF("id", "day", "nome")
       .writeTo("gpart.prices").append()
     val after = CommitLog(spark, s"$wh/prices").snapshot()
-    assert(after.files.filter(f => after.parts(f) == "d1").toSet === d1)
+    assert(after.files.filter(f => after.entry(f).partTag.get == "d1").toSet === d1)
     assert(GraftMergeTable.read(spark, wh, "prices")
       .select($"id").as[Long].collect().toSet === Set(1L, 2L, 3L))
   }
@@ -499,7 +499,7 @@ class CommitLogSpec extends SparkSpecBase {
     CommitLog(spark, t).appendPartitioned(
       Seq((1L, "d1", "a"), (2L, "d2", "b")).toDF("id", "day", "v"), "day")
     val d1Files = CommitLog(spark, t).snapshot()
-      .files.filter(f => CommitLog(spark, t).snapshot().parts(f) == "d1").toSet
+      .files.filter(f => CommitLog(spark, t).snapshot().entry(f).partTag.get == "d1").toSet
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, String, String, Long)]
     val stream = mem.toDF().toDF("id", "day", "v", "seq")
@@ -510,7 +510,7 @@ class CommitLogSpec extends SparkSpecBase {
       mem.addData((2L, "d2", "b2", 1L), (3L, "d2", "c", 1L)) // touches d2 only
       q.processAllAvailable()
       val s = CommitLog(spark, t).snapshot()
-      assert(s.files.filter(f => s.parts(f) == "d1").toSet === d1Files)
+      assert(s.files.filter(f => s.entry(f).partTag.get == "d1").toSet === d1Files)
       assert(CommitLog(spark, t).read().select($"id", $"v")
         .as[(Long, String)].collect().toSet
         === Set((1L, "a"), (2L, "b2"), (3L, "c")))
@@ -525,8 +525,8 @@ class CommitLogSpec extends SparkSpecBase {
     val day2 = Seq((3L, "2024-01-02", "c"), (4L, "2024-01-02", "d"))
     log.appendPartitioned((day1 ++ day2).toDF("id", "day", "v"), "day")
     val before = log.snapshot()
-    val day1Files = before.files.filter(f => before.parts(f) == "2024-01-01").toSet
-    assert(day1Files.nonEmpty && before.parts.size === before.files.size)
+    val day1Files = before.files.filter(f => before.entry(f).partTag.get == "2024-01-01").toSet
+    assert(day1Files.nonEmpty && before.entries.values.count(_.partTag.isDefined) === before.files.size)
 
     // merge touches only day 2
     log.upsertPartitioned(
@@ -535,7 +535,7 @@ class CommitLogSpec extends SparkSpecBase {
       Seq("id", "day"), CommitLog.LastWins, "day")
     val after = log.snapshot()
     // day-1 files rode through the commit byte-identical
-    assert(after.files.filter(f => after.parts(f) == "2024-01-01").toSet === day1Files)
+    assert(after.files.filter(f => after.entry(f).partTag.get == "2024-01-01").toSet === day1Files)
     // contents equal the full-table merge semantics
     assert(log.read().select($"id", $"v").as[(Long, String)].collect().toSet
       === Set((1L, "a"), (2L, "b"), (3L, "C2"), (4L, "d"), (5L, "e")))
@@ -615,7 +615,7 @@ class CommitLogSpec extends SparkSpecBase {
       === Set((1L, "a"), (9L, "z")))
     // untouched-partition files rode through the overwrite
     val s = log.snapshot()
-    assert(s.files.exists(f => s.parts(f) == "d1"))
+    assert(s.files.exists(f => s.entry(f).partTag.get == "d1"))
     // catalog surface (r10, native V2 writes): .overwritePartitions()
     // maps to the same replacePartitions semantics
     val wh = Files.createTempDirectory("graft-wh-dyn").toString
@@ -793,7 +793,7 @@ class CommitLogSpec extends SparkSpecBase {
     // every surviving file still carries its tag, so the partitioned
     // write paths keep accepting the table
     val s = log.snapshot()
-    assert(s.files.forall(s.parts.contains))
+    assert(s.files.forall(s.entry(_).partTag.isDefined))
     assert(log.readPartitions(Seq("d1")).select($"id").as[Long].collect().toSeq
       === Seq(1L))
     log.upsertPartitioned(Seq((10L, "d2", "c2")).toDF("id", "day", "v"),
@@ -848,7 +848,7 @@ class CommitLogSpec extends SparkSpecBase {
     fresh.optimize(targetFiles = 2)
     val s = fresh.snapshot()
     assert(s.files.size === 2)
-    assert(s.files.forall(f => s.blooms.get(f).exists(_.contains("k"))),
+    assert(s.files.forall(f => s.entry(f).blooms.contains("k")),
       "optimize must re-derive and re-attach the existing bloom index")
     assert(fresh.readPoint("k", 123L).count() === 1L)
   }
@@ -864,7 +864,7 @@ class CommitLogSpec extends SparkSpecBase {
     val before = log.read().as[(Long, Long)].collect().toSet
     assert(log.snapshot().files.size === 8)
     val preScan = log.snapshot().files.count { f =>
-      log.snapshot().stats(f).get("id").exists { case (mn: Long, mx: Long) =>
+      log.snapshot().entry(f).colStats.get("id").exists { case (mn: Long, mx: Long) =>
         mx >= 0L && mn <= 40L }
     }
     assert(preScan === 8) // stats prune nothing before clustering
@@ -875,7 +875,7 @@ class CommitLogSpec extends SparkSpecBase {
     assert(log.read().as[(Long, Long)].collect().toSet === before)
     // the z-ordered layout lets the same range read skip files
     val postScan = s.files.count { f =>
-      s.stats(f).get("id").exists { case (mn: Long, mx: Long) =>
+      s.entry(f).colStats.get("id").exists { case (mn: Long, mx: Long) =>
         mx >= 0L && mn <= 40L }
     }
     assert(postScan < 4, s"clustered range should prune, scanned $postScan/4")
@@ -906,16 +906,16 @@ class CommitLogSpec extends SparkSpecBase {
           .coalesce(1), "day")
     }
     val s0 = log.snapshot()
-    val d2Before = s0.files.filter(f => s0.parts(f) == "d2").toSet
-    assert(s0.files.count(f => s0.parts(f) == "d1") === 6)
+    val d2Before = s0.files.filter(f => s0.entry(f).partTag.get == "d2").toSet
+    assert(s0.files.count(f => s0.entry(f).partTag.get == "d1") === 6)
     val before = log.read().as[(Long, String, Double)].collect().toSet
 
     val v = log.optimizePartitions("day", targetFilesPerPartition = 1,
       partitions = Seq("d1"))
     val s1 = log.snapshot()
     assert(s1.version === v)
-    assert(s1.files.count(f => s1.parts(f) == "d1") === 1, "d1 compacted to one file")
-    assert(s1.files.filter(f => s1.parts(f) == "d2").toSet === d2Before,
+    assert(s1.files.count(f => s1.entry(f).partTag.get == "d1") === 1, "d1 compacted to one file")
+    assert(s1.files.filter(f => s1.entry(f).partTag.get == "d2").toSet === d2Before,
       "d2's files must ride through untouched")
     assert(log.read().as[(Long, String, Double)].collect().toSet === before,
       "content is bit-identical")
@@ -923,7 +923,7 @@ class CommitLogSpec extends SparkSpecBase {
     val v2 = log.optimizePartitions("day")
     val s2 = log.snapshot()
     assert(v2 === v + 1 && s2.files.size === 2)
-    assert(s2.files.forall(s2.parts.contains), "all files keep their tags")
+    assert(s2.files.forall(s2.entry(_).partTag.isDefined), "all files keep their tags")
     // everything at target already → no new commit
     assert(log.optimizePartitions("day") === v2)
     // a typo'd partition value fails loudly
@@ -956,7 +956,7 @@ class CommitLogSpec extends SparkSpecBase {
     def d1FilesAdmitting(lo: Long, hi: Long): Int = {
       val s = log.snapshot()
       s.files.count { f =>
-        s.parts(f) == "d1" && s.stats(f).get("id").exists {
+        s.entry(f).partTag.get == "d1" && s.entry(f).colStats.get("id").exists {
           case (mn: Long, mx: Long) => mx >= lo && mn <= hi }
       }
     }
@@ -965,7 +965,7 @@ class CommitLogSpec extends SparkSpecBase {
       partitions = Seq("d1"), zorderBy = Seq("id"))
     val s = log.snapshot()
     assert(s.version === v)
-    assert(s.files.count(f => s.parts(f) == "d1") <= 4)
+    assert(s.files.count(f => s.entry(f).partTag.get == "d1") <= 4)
     assert(log.read().as[(Long, String, Double)].collect().toSet === before)
     assert(d1FilesAdmitting(0L, 40L) < 4,
       "z-clustered files must carry tight id stats")
@@ -1104,7 +1104,7 @@ class CommitLogSpec extends SparkSpecBase {
     assert(log.readPoint("name", "bob").count() === 0L)
     assert(log.readPoint("name", "carol").count() === 1L)
     val s = log.snapshot()
-    assert(s.files.forall(s.blooms.contains),
+    assert(s.files.forall(s.entry(_).blooms.nonEmpty),
       "every live file should carry its bloom after the delete")
   }
 
@@ -1367,7 +1367,7 @@ class CommitLogSpec extends SparkSpecBase {
         s"expected 1 write job for 10 partitions, saw ${jobs.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
     val s = log.snapshot()
-    assert(s.parts.values.toSet === (0 until 10).map(p => s"p$p").toSet)
+    assert(s.entries.values.flatMap(_.partTag).toSet === (0 until 10).map(p => s"p$p").toSet)
     assert(log.read().filter($"v" === "v2").count() === 20L)
   }
 
@@ -1379,7 +1379,7 @@ class CommitLogSpec extends SparkSpecBase {
       Seq((1L, "2024-01-01 10:00", "a"), (2L, "d2", "b"))
         .toDF("id", "ts", "v"), "ts")
     val s = log.snapshot()
-    assert(s.parts.values.toSet === Set("2024-01-01 10:00", "d2"))
+    assert(s.entries.values.flatMap(_.partTag).toSet === Set("2024-01-01 10:00", "d2"))
     assert(log.readPartitions(Seq("2024-01-01 10:00"))
       .select($"id").as[Long].collect().toSeq === Seq(1L))
   }
@@ -1451,7 +1451,7 @@ class CommitLogSpec extends SparkSpecBase {
       === Seq(Some(1.0), None, Some(6.0)))
     // tags survived the rewrite
     val s = log.snapshot()
-    assert(s.files.forall(s.parts.contains))
+    assert(s.files.forall(s.entry(_).partTag.isDefined))
   }
 
   test("update validates CHECK constraints on the rewritten rows") {
@@ -1762,8 +1762,8 @@ class CommitLogSpec extends SparkSpecBase {
     assert(log.read().as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 100.0), (2L, "d1", 2.0), (3L, "d2", 3.0), (9L, "d3", 9.0)))
     val s = log.snapshot()
-    assert(s.files.forall(s.parts.contains), "all files keep partition tags")
-    assert(s.parts.values.toSet === Set("d1", "d2", "d3"))
+    assert(s.files.forall(s.entry(_).partTag.isDefined), "all files keep partition tags")
+    assert(s.entries.values.flatMap(_.partTag).toSet === Set("d1", "d2", "d3"))
   }
 
   test("concurrent merges with disjoint keys all land losslessly") {
@@ -1816,7 +1816,7 @@ class CommitLogSpec extends SparkSpecBase {
     assert(versions.sorted === Seq(3L, 4L), "both optimizes won a version")
     val s = CommitLog(spark, t).snapshot()
     assert(s.files.size === 2, "each partition compacted to one file")
-    assert(s.files.forall(s.parts.contains))
+    assert(s.files.forall(s.entry(_).partTag.isDefined))
     assert(CommitLog(spark, t).read().as[(Long, String, Double)].collect().toSet
       === before, "content is bit-identical after racing optimizes")
   }
@@ -1914,7 +1914,7 @@ class CommitLogSpec extends SparkSpecBase {
     val log2 = CommitLog(spark, t)
     log2.append(Seq((4L, "d")).toDF("id", "value"))                 // v4
     val s2 = log2.snapshot()
-    assert(s2.files.forall(f => s2.blooms.get(f).exists(_.contains("v"))),
+    assert(s2.files.forall(f => s2.entry(f).blooms.contains("v")),
       "every file (incl. the post-rename config-less append) must carry " +
         "a bloom under the stable physical key")
     assert(log2.readPoint("value", "d").as[(Long, String)].collect().toSet
@@ -2065,7 +2065,7 @@ class CommitLogSpec extends SparkSpecBase {
       Seq((4L, "d3", 4.0)).toDF("id", "day", "x"), partCol = Some("day"))
     assert(pv === 1L)
     val s2 = log2.snapshot()
-    assert(s2.files.nonEmpty && s2.files.forall(s2.parts.contains),
+    assert(s2.files.nonEmpty && s2.files.forall(s2.entry(_).partTag.isDefined),
       "every file must keep a partition tag through the swap")
     assert(log2.read().as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 1.0), (3L, "d2", 3.0), (4L, "d3", 4.0)))
@@ -2213,7 +2213,7 @@ class CommitLogSpec extends SparkSpecBase {
     // physically-named source files
     assert(clone.read().columns.toSeq === Seq("id", "day", "price"))
     // per-file stats carried: range read stays correct (and prunable)
-    assert(clone.snapshot().stats.nonEmpty)
+    assert(clone.snapshot().entries.values.exists(_.hasStats))
     assert(clone.readRange("id", 2L, 3L).count() === 2L)
     // partition tags carried: the scoped paths accept the clone as-is
     clone.replacePartitions(

@@ -44,7 +44,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
     val after = log.snapshot()
     assert(after.version == before.version + 1, "one atomic commit")
     assert(before.files.forall(after.files.contains), "no data file retired")
-    assert(after.dvs.nonEmpty, "the SQL merge must take the DV path")
+    assert(after.hasDvs, "the SQL merge must take the DV path")
     assert(spark.table(s"$cat.t").as[(Long, Double, String)].collect().toSet
       === Set((1L, 10.0, "a"), (2L, 20.0, "UPD"), (4L, 40.0, "d"), (9L, 9.0, "new")))
   }
@@ -62,7 +62,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
       WHEN NOT MATCHED THEN INSERT *""")
     assert(spark.table(s"$cat.t").as[(Long, String)].collect().toSet
       === Set((1L, "x"), (7L, "p"), (7L, "q")))
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.isEmpty,
+    assert(!CommitLog(spark, s"$wh/t").snapshot().hasDvs,
       "the fallback is the rewrite path — no DV")
   }
 
@@ -86,7 +86,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
     val after = log.snapshot()
     assert(after.version == before.version + 1, "one atomic commit")
     assert(before.files.forall(after.files.contains), "no data file retired")
-    assert(after.dvs.nonEmpty, "by-source SQL MERGE must take the DV path")
+    assert(after.hasDvs, "by-source SQL MERGE must take the DV path")
     assert(spark.table(s"$cat.t").as[(Long, String)].collect().toSet
       === Set((1L, "KEPT"), (3L, "aged")))
     // a source reference inside a by-source clause is illegal ANSI —
@@ -120,7 +120,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
     assert(after.version == before.version + 1, "one atomic commit")
     assert(before.files.forall(after.files.contains),
       "the evolving merge must take the DV path — no data file retired")
-    assert(after.dvs.nonEmpty)
+    assert(after.hasDvs)
     assert(spark.table(s"$cat.t").schema.fieldNames.toSeq === Seq("id", "v", "w"),
       "the schema must evolve to carry the source's new column")
     assert(spark.table(s"$cat.t").as[(Long, String, Option[Double])]
@@ -152,7 +152,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
     }
     assert(spark.table(s"$cat.t").as[(Long, String)].collect().toSet
       === Set((1L, "a"), (2L, "B"), (3L, "c")))
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.isEmpty,
+    assert(!CommitLog(spark, s"$wh/t").snapshot().hasDvs,
       "opt-out must ride the group-based rewrite, not the DV path")
   }
 
@@ -169,7 +169,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
       WHEN MATCHED THEN UPDATE SET x = s.x
       WHEN NOT MATCHED THEN INSERT *""")
     val snap = CommitLog(spark, s"$wh/t").snapshot()
-    assert(snap.files.forall(snap.parts.contains), "all-tagged invariant holds")
+    assert(snap.files.forall(snap.entry(_).partTag.isDefined), "all-tagged invariant holds")
     assert(spark.table(s"$cat.t").as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 10.0), (2L, "d1", 2.0), (3L, "d2", 3.0), (9L, "d3", 9.0)))
   }
@@ -245,7 +245,7 @@ class MorMergeSqlSpec extends SparkSpecBase {
     }
     assert(spark.table(s"$cat.t").as[(Long, String)].collect().toSet
       === Set((1L, "a"), (2L, "B2")))
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty,
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs,
       "the translated renamed-key merge must still take the DV path")
   }
 }

@@ -372,7 +372,7 @@ class SourcesSpec extends SparkSpecBase {
       .tableProperty("merge.partcol", "day")
       .create()
     val log = graft.sources.CommitLog(spark, s"$wh/t")
-    val d1Files = log.snapshot().files.filter(f => log.snapshot().parts(f) == "d1").toSet
+    val d1Files = log.snapshot().files.filter(f => log.snapshot().entry(f).partTag.get == "d1").toSet
     assert(d1Files.nonEmpty)
 
     // dynamic partition overwrite — the V1 bridge rejected this at analysis
@@ -382,7 +382,7 @@ class SourcesSpec extends SparkSpecBase {
     assert(spark.table("gv2w.t").as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 1.0), (20L, "d2", 20.0), (30L, "d3", 30.0)))
     assert(d1Files.subsetOf(s.files.toSet), "untouched partition files survive")
-    assert(s.files.forall(s.parts.contains), "all-tagged invariant holds")
+    assert(s.files.forall(s.entry(_).partTag.isDefined), "all-tagged invariant holds")
 
     // dynamic overwrite without merge.partcol fails loudly at analysis/build
     Seq((1L, 1.0)).toDF("id", "x")
@@ -413,7 +413,7 @@ class SourcesSpec extends SparkSpecBase {
       === Set((1L, "a"), (2L, "b"), (3L, "c")))
     // the adopted files carry manifest stats (pruning still works);
     // an empty task file has no row groups and thus legitimately none
-    assert((s.files.toSet -- v0Files).exists(s.stats.contains),
+    assert((s.files.toSet -- v0Files).exists(s.entry(_).hasStats),
       "adopted data-bearing files must have harvested min/max stats")
     // SQL INSERT INTO rides the same native path
     spark.sql("INSERT INTO gv2a.t VALUES (4, 'd')")
@@ -438,19 +438,19 @@ class SourcesSpec extends SparkSpecBase {
       .create()
     val log = graft.sources.CommitLog(spark, s"$wh/tagged")
     val before = log.snapshot()
-    assert(before.files.forall(before.parts.contains), "precondition: all tagged")
+    assert(before.files.forall(before.entry(_).partTag.isDefined), "precondition: all tagged")
 
     // stats admit only the file(s) holding id=100 — d1/d3 files must
     // ride through BYTE-IDENTICAL (same file names, never rewritten)
     spark.sql("UPDATE grlop.tagged SET x = x * 10 WHERE id BETWEEN 100 AND 150")
     val after = log.snapshot()
-    val untouched = before.files.filter(f => before.parts(f) != "d2").toSet
+    val untouched = before.files.filter(f => before.entry(f).partTag.get != "d2").toSet
     assert(untouched.subsetOf(after.files.toSet),
       s"untouched partitions' files must survive: $untouched vs ${after.files}")
-    untouched.foreach(f => assert(after.parts(f) === before.parts(f), s"tag lost on $f"))
-    assert(after.files.forall(after.parts.contains),
+    untouched.foreach(f => assert(after.entry(f).partTag.get === before.entry(f).partTag.get, s"tag lost on $f"))
+    assert(after.files.forall(after.entry(_).partTag.isDefined),
       "ALL live files (incl. rewritten ones) must carry partition tags")
-    assert(after.files.filterNot(before.files.toSet).forall(f => after.parts(f) == "d2"),
+    assert(after.files.filterNot(before.files.toSet).forall(f => after.entry(f).partTag.get == "d2"),
       "rewritten files must be tagged with their own partition value")
     assert(spark.table("grlop.tagged").as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 1.0), (2L, "d1", 2.0), (100L, "d2", 30.0), (200L, "d3", 4.0)))
@@ -464,7 +464,7 @@ class SourcesSpec extends SparkSpecBase {
       WHEN MATCHED THEN UPDATE SET x = s.x
       WHEN NOT MATCHED THEN INSERT (id, day, x) VALUES (s.id, s.day, s.x)""")
     val s2 = log.snapshot()
-    assert(s2.files.forall(s2.parts.contains), "all-tagged invariant after MERGE")
+    assert(s2.files.forall(s2.entry(_).partTag.isDefined), "all-tagged invariant after MERGE")
     assert(spark.table("grlop.tagged").as[(Long, String, Double)].collect().toSet
       === Set((1L, "d1", 0.0), (2L, "d1", 2.0), (100L, "d2", 30.0), (300L, "d4", 9.0)))
     // partition-scoped reads still work post-DML (the invariant pays off)
@@ -585,11 +585,11 @@ class SourcesSpec extends SparkSpecBase {
       .create()
     val logp = graft.sources.CommitLog(spark, s"$wh/tp")
     logp.appendPartitioned(Seq((4L, "d1", 4.0)).toDF("id", "day", "x"), "day")
-    assert(logp.snapshot().files.count(f => logp.snapshot().parts(f) == "d1") === 2)
+    assert(logp.snapshot().files.count(f => logp.snapshot().entry(f).partTag.get == "d1") === 2)
     spark.sql("CALL gproc.system.optimize_partitions(`table` => 'tp', part_col => 'day')")
     val sp = logp.snapshot()
-    assert(sp.files.count(f => sp.parts(f) == "d1") === 1)
-    assert(sp.files.forall(sp.parts.contains))
+    assert(sp.files.count(f => sp.entry(f).partTag.get == "d1") === 1)
+    assert(sp.files.forall(sp.entry(_).partTag.isDefined))
 
     // r16: maintain = compact + age-scoped prune + vacuum in one CALL;
     // retain_hours 0 folds everything into the fresh checkpoint
@@ -945,7 +945,7 @@ class SourcesSpec extends SparkSpecBase {
     spark.sql("INSERT INTO gpby.t VALUES (1, 'd1', 1.0), (2, 'd2', 2.0)")
     val log = graft.sources.CommitLog(spark, s"$wh/t")
     val s = log.snapshot()
-    assert(s.files.nonEmpty && s.files.forall(s.parts.contains),
+    assert(s.files.nonEmpty && s.files.forall(s.entry(_).partTag.isDefined),
       "every file from a partitioned-by table must carry a manifest tag")
     assert(log.readPartitions(Seq("d2")).as[(Long, String, Double)]
       .collect().toSet === Set((2L, "d2", 2.0)))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV
 
 /** r14 manifest-answered pushdowns on commit-log V2 scans:
   * [[GraftLogScanBuilder]]'s `SupportsPushDownAggregates` (global
-  * COUNT(*)/MIN/MAX folded from `Snapshot.rows`/`Snapshot.stats` into
+  * COUNT(*)/MIN/MAX folded from `FileEntry.rows`/`FileEntry.colStats` into
   * a one-row [[GraftLogScanBuilder.ManifestAggScan]] — zero data files
   * opened) and `SupportsPushDownLimit` (file-list prefix whose
   * DV-adjusted live row counts provably cover the limit). Pins the
@@ -90,7 +90,7 @@ class AggLimitPushdownSpec extends graft.SparkSpecBase {
     try spark.sql(s"DELETE FROM $cat.t WHERE id <= 30")
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val log = CommitLog(spark, s"$wh/t")
-    assert(log.snapshot().dvs.nonEmpty, "precondition: the delete was MoR")
+    assert(log.snapshot().hasDvs, "precondition: the delete was MoR")
 
     val cnt = spark.table(s"$cat.t").agg(count(lit(1)).as("cnt"))
     assert(manifestAnswered(cnt), "DV-masked count must still fold from " +
@@ -177,7 +177,7 @@ class AggLimitPushdownSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try log.delete($"id" % 10 === 1)
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(log.snapshot().dvs.nonEmpty)
+    assert(log.snapshot().hasDvs)
     val q2 = spark.table(s"$cat.t").agg(count($"s").as("c_s"))
     assert(manifestAnswered(q2),
       "accounted DVs must keep COUNT(col) alive (r18):\n"
@@ -227,7 +227,7 @@ class AggLimitPushdownSpec extends graft.SparkSpecBase {
       spark.conf.unset("spark.graft.dv.minTouchedBytes")
       spark.conf.unset("spark.graft.dv.maxRatio")
     }
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty,
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs,
       "precondition: the partition delete was merge-on-read")
     val q2 = spark.table(s"$cat.t").groupBy($"flag")
       .agg(count(lit(1)).as("cnt"))
@@ -766,7 +766,7 @@ class AggLimitPushdownSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try spark.sql(s"DELETE FROM $cat.t WHERE id <= 20")
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty)
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs)
 
     // first file now yields 80 live rows: LIMIT 90 needs TWO files (a
     // raw-row-count bound would truncate to one and under-fill 80<90)
@@ -793,7 +793,7 @@ class AggLimitPushdownSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try spark.sql(s"DELETE FROM $cat.t WHERE id <= 23")
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty)
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs)
     assert(scanRowCount(spark.table(s"$cat.t")) === Some(BigInt(100)))
     // a pushed filter makes the file-row total an overestimate: the
     // scan must NOT claim exactness

@@ -33,7 +33,7 @@ class CdcLineageSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try log.update($"id" >= 45L, Map("v" -> expr("v + 1000"))) // v1, MoR
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(log.snapshot().dvs.nonEmpty, "the update must take the DV path")
+    assert(log.snapshot().hasDvs, "the update must take the DV path")
 
     // default feed: the r17 wire exactly — no update types, no _row_id
     val plain = log.readChanges(v0)
@@ -69,7 +69,7 @@ class CdcLineageSpec extends graft.SparkSpecBase {
       CommitLog.WhenMatchedUpdate(Map("v" -> col("s.v"))),
       CommitLog.WhenNotMatchedInsert()))
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(log.snapshot().dvs.nonEmpty, "the merge must take the MoR path")
+    assert(log.snapshot().hasDvs, "the merge must take the MoR path")
 
     val feed = log.readChanges(v0, lineage = true)
     assert(types(feed) === Map("update_preimage" -> 5L,
@@ -92,7 +92,7 @@ class CdcLineageSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.enabled", "false")
     try log.update($"id" === 7L, Map("v" -> lit(0L)))
     finally spark.conf.unset("spark.graft.dv.enabled")
-    assert(log.snapshot().dvs.isEmpty)
+    assert(!log.snapshot().hasDvs)
     val feed = log.readChanges(v0, lineage = true)
     val t = types(feed)
     assert(!t.contains("update_preimage") && !t.contains("update_postimage"),
@@ -118,7 +118,7 @@ class CdcLineageSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try log.update($"id" === 19L, Map("v" -> lit(0L)))
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(log.snapshot().dvs.nonEmpty)
+    assert(log.snapshot().hasDvs)
     val feed = log.readChanges(v0, lineage = true)
     val t = types(feed)
     assert(t.keySet === Set("insert", "delete"),
@@ -137,7 +137,7 @@ class CdcLineageSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try log.update($"id" % 7 === 0, Map("x" -> expr("x + 100000")))
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(log.snapshot().dvs.nonEmpty)
+    assert(log.snapshot().hasDvs)
     graft.operators.MatView.applyDelta(spark, viewRoot,
       log.readChanges(-1L, lineage = true), Seq("g"), Seq("x"))
     val view = CommitLog(spark, viewRoot).read()

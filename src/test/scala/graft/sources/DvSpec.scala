@@ -53,7 +53,8 @@ class DvSpec extends graft.SparkSpecBase
     assert(log.delete($"id" === 105L) === 3L)
     val after = log.snapshot()
     assert(after.files === before.files, "a DV delete must not touch data files")
-    assert(after.dvs.size === 1 && after.dvs.values.head.map(_.count) === Seq(1L))
+    assert(after.entries.values.count(_.dvs.nonEmpty) === 1 &&
+      after.entries.values.map(_.dvs).filter(_.nonEmpty).head.map(_.count) === Seq(1L))
     assert(log.read().count() === 29L)
     assert(!log.read().filter($"id" === 105L).isEmpty === false)
     // the masked row is gone but its file-mates survive
@@ -68,9 +69,9 @@ class DvSpec extends graft.SparkSpecBase
     log.delete($"id" === 105L)
     log.delete($"id" === 107L || $"id" === 3L) // same file again + another
     val s = log.snapshot()
-    assert(s.files.size === 3 && s.dvs.size === 2)
-    val f100 = s.files.find(f => s.stats(f)("id")._1 == 100L).get
-    assert(s.dvs(f100).map(_.count).sum === 2L)
+    assert(s.files.size === 3 && s.entries.values.count(_.dvs.nonEmpty) === 2)
+    val f100 = s.files.find(f => s.entry(f).colStats("id")._1 == 100L).get
+    assert(s.entry(f100).dvs.map(_.count).sum === 2L)
     assert(log.read().count() === 27L)
     assert(log.read().filter($"id".isin(3L, 105L, 107L)).isEmpty)
     // a re-delete of already-masked rows commits nothing
@@ -85,14 +86,14 @@ class DvSpec extends graft.SparkSpecBase
     log.delete($"id" >= 100L && $"id" <= 108L) // 9 of the file's 10 rows
     val s = log.snapshot()
     assert((before -- s.files.toSet).size === 1, "the hot file must be rewritten")
-    assert(s.dvs.isEmpty)
+    assert(!s.hasDvs)
     assert(log.read().count() === 21L)
     // conf opt-out: even a tiny delete rewrites
     spark.conf.set("spark.graft.dv.enabled", "false")
     try {
       val filesBefore = log.snapshot().files.toSet
       log.delete($"id" === 3L)
-      assert(log.snapshot().dvs.isEmpty
+      assert(!log.snapshot().hasDvs
         && (filesBefore -- log.snapshot().files.toSet).size === 1)
     } finally spark.conf.unset("spark.graft.dv.enabled")
   }
@@ -106,7 +107,7 @@ class DvSpec extends graft.SparkSpecBase
       .writeTo("gdvc.t").tableProperty("merge.log", "true").create()
     val log = CommitLog(spark, s"$wh/t")
     log.delete($"id" === 7L || $"id" === 21L)
-    assert(log.snapshot().dvs.nonEmpty, "small delete must take the DV path")
+    assert(log.snapshot().hasDvs, "small delete must take the DV path")
     // DESCRIBE DETAIL surfaces the mask state
     val d = spark.sql("CALL gdvc.system.detail(`table` => 't')").head()
     assert(d.getAs[Long]("num_deletion_vectors") >= 1L
@@ -141,7 +142,7 @@ class DvSpec extends graft.SparkSpecBase
       "no touched file may be rewritten")
     assert((s.files.toSet -- before.files.toSet).nonEmpty,
       "the updated rows must land as new files")
-    assert(s.dvs.size === 2)
+    assert(s.entries.values.count(_.dvs.nonEmpty) === 2)
     assert(log.read().count() === 30L, "an update must not change row count")
     assert(log.read().filter($"v" === "patched")
       .select($"id").as[Long].collect().sorted.toSeq === Seq(2L, 104L))
@@ -166,7 +167,7 @@ class DvSpec extends graft.SparkSpecBase
     log.deleteAndAppend(mk, Seq("id"), rows)
     val s = log.snapshot()
     assert(s.version === before.version + 1, "swap must be ONE commit")
-    assert(before.files.forall(s.files.contains) && s.dvs.size === 2)
+    assert(before.files.forall(s.files.contains) && s.entries.values.count(_.dvs.nonEmpty) === 2)
     assert(log.read().count() === 30L)
     assert(log.read().filter($"id" === 3L).select($"v").as[String].head() === "v3b")
     assert(log.read().filter($"id" === 105L).select($"x").as[Double].head() === 55.0)
@@ -182,21 +183,21 @@ class DvSpec extends graft.SparkSpecBase
     val log = threeFiles(root)
     log.delete($"id" === 5L)    // DV on file A
     log.delete($"id" === 205L)  // DV on file C
-    assert(log.snapshot().dvs.size === 2)
+    assert(log.snapshot().entries.values.count(_.dvs.nonEmpty) === 2)
     // a copy-on-write update (DV path disabled) rewrites file A: its
     // DV retires WITH it, file C's rides through
     spark.conf.set("spark.graft.dv.enabled", "false")
     try log.update($"id" === 1L, Map("v" -> lit("patched")))
     finally spark.conf.unset("spark.graft.dv.enabled")
     val s = log.snapshot()
-    assert(s.dvs.size === 1)
+    assert(s.entries.values.count(_.dvs.nonEmpty) === 1)
     assert(log.read().count() === 28L)
     assert(log.read().filter($"id".isin(5L, 205L)).isEmpty)
     assert(log.read().filter($"v" === "patched").count() === 1L)
     // OPTIMIZE purges every DV (full rewrite) and keeps content
     log.optimize(targetFiles = 2)
     val s2 = log.snapshot()
-    assert(s2.dvs.isEmpty && s2.files.size === 2)
+    assert(!s2.hasDvs && s2.files.size === 2)
     assert(log.read().count() === 28L
       && log.read().filter($"id".isin(5L, 205L)).isEmpty)
   }
@@ -246,7 +247,7 @@ class DvSpec extends graft.SparkSpecBase
     val log = threeFiles(root)
     log.delete($"id" === 3L)
     val dvName = new org.apache.hadoop.fs.Path(
-      log.snapshot().dvs.values.head.head.path).getName
+      log.snapshot().entries.values.map(_.dvs).filter(_.nonEmpty).head.head.path).getName
     val dataDir = new org.apache.hadoop.fs.Path(root, "data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(log.vacuum(stagingTtlMs = 0L) === 0,
@@ -273,8 +274,8 @@ class DvSpec extends graft.SparkSpecBase
     val before = log.snapshot()
     log.delete($"id" === 4L, partCol = Some("par"))
     val s = log.snapshot()
-    assert(s.files === before.files && s.dvs.size === 1)
-    assert(s.files.forall(s.parts.contains))
+    assert(s.files === before.files && s.entries.values.count(_.dvs.nonEmpty) === 1)
+    assert(s.files.forall(s.entry(_).partTag.isDefined))
     assert(log.read().count() === 19L)
     assert(log.readPartitions(Seq("even")).count() === 9L,
       "partition-scoped reads must mask too")
@@ -299,7 +300,7 @@ class DvSpec extends graft.SparkSpecBase
     assert(after.files.size > before.files.size,
       "updated + inserted rows land as appended files")
     // two masked positions (the delete + the update's old version)
-    assert(after.dvs.values.flatten.map(_.count).sum === 2L)
+    assert(after.entries.values.flatMap(_.dvs).map(_.count).sum === 2L)
     val t = log.read()
     assert(t.count() === 30L) // 30 - 1 deleted + 1 inserted
     assert(t.filter($"id" === 3L).isEmpty)
@@ -319,7 +320,7 @@ class DvSpec extends graft.SparkSpecBase
       CommitLog.WhenMatchedUpdate(Map("v" -> col("s.v")),
         Some(col("s.x") > lit(0)))))
     val s = log.snapshot()
-    assert(s.dvs.values.flatten.map(_.count).sum === 1L,
+    assert(s.entries.values.flatMap(_.dvs).map(_.count).sum === 1L,
       "only the FIRED clause's row is masked")
     assert(log.read().count() === 30L)
     assert(log.read().filter($"id" === 105L).select("v").head.getString(0)
@@ -338,7 +339,7 @@ class DvSpec extends graft.SparkSpecBase
     log.merge(src, Seq("id"), Seq(
       CommitLog.WhenMatchedUpdate(Map("v" -> col("s.v")))))
     val after = log.snapshot()
-    assert(after.dvs.isEmpty, "an over-cap merge must not mask")
+    assert(!after.hasDvs, "an over-cap merge must not mask")
     assert(before.files.forall(f => !after.files.contains(f)),
       "copy-on-write retires every touched file")
     assert(log.read().count() === 30L)
@@ -357,8 +358,8 @@ class DvSpec extends graft.SparkSpecBase
       CommitLog.WhenMatchedUpdate(Map("v" -> col("s.v"))),
       CommitLog.WhenNotMatchedInsert()), partCol = Some("par"))
     val s = log.snapshot()
-    assert(before.files.forall(s.files.contains) && s.dvs.nonEmpty)
-    assert(s.files.forall(s.parts.contains),
+    assert(before.files.forall(s.files.contains) && s.hasDvs)
+    assert(s.files.forall(s.entry(_).partTag.isDefined),
       "appended merge files must carry partition tags")
     assert(log.read().count() === 21L)
     assert(log.readPartitions(Seq("even")).filter($"id" === 4L)

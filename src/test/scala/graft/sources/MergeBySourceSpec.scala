@@ -51,7 +51,7 @@ class MergeBySourceSpec extends graft.SparkSpecBase {
     log.appendPartitioned(
       Seq((1L, "a"), (2L, "a"), (10L, "b"), (11L, "b")).toDF("id", "grp"), "grp")
     val filesB = log.snapshot().files.filter(f =>
-      log.snapshot().parts.get(f).contains("b")).toSet
+      log.snapshot().entry(f).partTag.contains("b")).toSet
     // sync partition 'a' to {1}: 2 deletes; partition 'b' out of scope
     log.merge(Seq((1L, "a")).toDF("id", "grp"), Seq("id"), Seq(
       CommitLog.WhenNotMatchedBySourceDelete(Some(col("grp") === "a"))),
@@ -84,7 +84,7 @@ class MergeBySourceSpec extends graft.SparkSpecBase {
       val s = log.snapshot()
       assert(files0.subsetOf(s.files.toSet),
         "MoR must not rewrite the touched files")
-      assert(s.dvs.nonEmpty, "the commit must carry deletion vectors")
+      assert(s.hasDvs, "the commit must carry deletion vectors")
       assert(log.history().orderBy(col("version").desc).limit(1)
         .select("action").as[String].collect().head === "add_dv")
       assert(log.read().orderBy("id").as[(Long, String, Option[Int])]

@@ -50,7 +50,7 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     assert(after.files.toSet === before.files.toSet,
       "spec evolution must rewrite ZERO data files")
     assert(after.specs === Seq("days(ts)", "hours(ts)"))
-    assert(after.files.forall(f => after.specIdOf(f) === 0),
+    assert(after.files.forall(f => after.entry(f).specId === 0),
       "existing files keep the spec that wrote them")
 
     // new writes land under the NEW spec (through the catalog property)
@@ -58,11 +58,11 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     val mixed = CommitLog(spark, s"$wh/t").snapshot()
     val newFiles = mixed.files.toSet -- after.files.toSet
     assert(newFiles.nonEmpty)
-    assert(newFiles.forall(f => mixed.specIdOf(f) === 1),
+    assert(newFiles.forall(f => mixed.entry(f).specId === 1),
       "post-evolution files must stamp the current spec")
     // hours(ts) tags are epoch-hours (day*24 + hour), disjoint from the
     // day files' epoch-day tags
-    assert(newFiles.forall(f => mixed.parts(f).toLong >= 48L))
+    assert(newFiles.forall(f => mixed.entry(f).partTag.get.toLong >= 48L))
 
     // mixed-spec reads: values correct under ts-range and full scans
     val all = spark.table(s"$cat.t")
@@ -113,11 +113,11 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
 
     // the repair: exactly the stale files rewrite, under the new spec
     val pre = log.snapshot()
-    val stale = pre.files.filter(f => pre.specIdOf(f) === 0).toSet
+    val stale = pre.files.filter(f => pre.entry(f).specId === 0).toSet
     val (_, n) = log.migrateSpec()
     assert(n === stale.size && n > 0)
     val post = log.snapshot()
-    assert(post.files.forall(f => post.specIdOf(f) === 1))
+    assert(post.files.forall(f => post.entry(f).specId === 1))
     assert((post.files.toSet intersect stale).isEmpty, "stale files retired")
     assert(stale.subsetOf(pre.files.toSet)
       && (pre.files.toSet -- stale).subsetOf(post.files.toSet),
@@ -150,7 +150,7 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     val s3 = log.snapshot()
     assert(s3.specs === Seq("days(ts)", "hours(ts)", "months(ts)"))
     assert(Set(0, 1, 2).subsetOf(
-      s3.files.map(f => s3.specIdOf(f)).toSet), "three eras live at once")
+      s3.files.map(f => s3.entry(f).specId).toSet), "three eras live at once")
     // reads stay correct across all three eras
     assert(spark.table(s"$cat.t").agg(sum($"v")).collect()(0).getLong(0)
       === (0 until 12).map(_ * 10L).sum)
@@ -159,12 +159,12 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     assert(d.getAs[String]("part_spec_registry")
       === "days(ts);hours(ts);months(ts)")
     assert(d.getAs[Long]("num_stale_spec_files")
-      === s3.files.count(f => s3.specIdOf(f) != 2).toLong)
+      === s3.files.count(f => s3.entry(f).specId != 2).toLong)
     // ONE migrate sweeps BOTH older eras under the current spec
     val (_, n) = log.migrateSpec()
-    assert(n === s3.files.count(f => s3.specIdOf(f) != 2))
+    assert(n === s3.files.count(f => s3.entry(f).specId != 2))
     val s4 = log.snapshot()
-    assert(s4.files.forall(f => s4.specIdOf(f) === 2))
+    assert(s4.files.forall(f => s4.entry(f).specId === 2))
     assert(spark.table(s"$cat.t").agg(sum($"v")).collect()(0).getLong(0)
       === (0 until 12).map(_ * 10L).sum)
   }
@@ -222,7 +222,7 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     val s2 = CommitLog(spark, s"$wh/t").snapshot()
     assert(s2.specs === Seq("days(ts)", "hours(ts)"),
       "a data restore does not undo a spec evolution")
-    assert(s2.files.forall(f => s2.specIdOf(f) === 0),
+    assert(s2.files.forall(f => s2.entry(f).specId === 0),
       "restored files keep the spec that wrote them")
     // writes must still land under the CURRENT (evolved) spec
     val ew = intercept[IllegalArgumentException] {
@@ -236,16 +236,16 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     log.compact(); log.prune()
     val s1 = CommitLog(spark, s"$wh/t").snapshot()
     assert(s1.specs === Seq("days(ts)", "hours(ts)"))
-    assert(s1.files.count(f => s1.specIdOf(f) === 0) > 0)
-    assert(s1.files.count(f => s1.specIdOf(f) === 1) > 0)
+    assert(s1.files.count(f => s1.entry(f).specId === 0) > 0)
+    assert(s1.files.count(f => s1.entry(f).specId === 1) > 0)
 
     // clone carries registry + per-file ids verbatim
     val cloneRoot = Files.createTempDirectory("psev-clone").toString + "/c"
     log.cloneTo(cloneRoot)
     val cs = CommitLog(spark, cloneRoot).snapshot()
     assert(cs.specs === Seq("days(ts)", "hours(ts)"))
-    assert(cs.files.count(f => cs.specIdOf(f) === 0) > 0)
-    assert(cs.files.count(f => cs.specIdOf(f) === 1) > 0)
+    assert(cs.files.count(f => cs.entry(f).specId === 0) > 0)
+    assert(cs.files.count(f => cs.entry(f).specId === 1) > 0)
   }
 
   test("SPJ reporting refuses on a mixed-spec scan, re-admits after migration") {
@@ -340,11 +340,11 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
 
   test("a CoW rewrite on a mixed-spec table must not promote riding stale files") {
     // ADVICE r18 (high): the fold's "replace" fallback used to default
-    // any riding file ABSENT from prev.fileSpec to the CURRENT spec id
-    // — but pre-evolution files are deliberately absent (absent = spec
+    // any riding file without a recorded spec id to the CURRENT spec id
+    // — but pre-evolution files deliberately record none (none = spec
     // 0), so one small copy-on-write rewrite silently promoted every
     // stale file, scoped ops stopped refusing, and migrateSpec saw 0
-    // stale. Riding files must keep specIdOf's reading (0 when absent).
+    // stale. Riding files must keep the spec id they carried.
     val (cat, wh) = freshCat("cowmix")
     batch(0, 2).limit(0).writeTo(s"$cat.t")
       .tableProperty("merge.log", "true")
@@ -356,7 +356,7 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES('merge.partcol'='hours(ts)')")
     log.appendPartitioned(batch(2, 3), "hours(ts)")
     val pre = log.snapshot()
-    val stale = pre.files.filter(f => pre.specIdOf(f) === 0).toSet
+    val stale = pre.files.filter(f => pre.entry(f).specId === 0).toSet
     assert(stale.nonEmpty)
 
     // ONE-row CoW delete (tiny table, far below the DV byte floor)
@@ -367,17 +367,17 @@ class PartSpecEvolutionSpec extends graft.SparkSpecBase {
     val post = log.snapshot()
     val riding = post.files.toSet intersect stale
     assert(riding.nonEmpty, "some stale files must ride the rewrite untouched")
-    assert(riding.forall(f => post.specIdOf(f) === 0),
+    assert(riding.forall(f => post.entry(f).specId === 0),
       "riding stale files must KEEP their create-time spec id")
     // the replacement file itself is new — it stamps the current spec
     assert((post.files.toSet -- pre.files.toSet).forall(f =>
-      post.specIdOf(f) === post.currentSpecId))
+      post.entry(f).specId === post.currentSpecId))
 
     // the guards the promotion used to blind: scoped reads still
     // refuse on the mix, and migrateSpec still sees the stale files
     val er = intercept[IllegalArgumentException] { log.readPartitions(Seq("48")) }
     assert(er.getMessage.contains("migrateSpec"))
-    val staleNow = post.files.count(f => post.specIdOf(f) !== post.currentSpecId)
+    val staleNow = post.files.count(f => post.entry(f).specId !== post.currentSpecId)
     val (_, n) = log.migrateSpec()
     assert(n === staleNow && n > 0,
       "migrateSpec must still see every un-promoted stale file")

@@ -116,8 +116,8 @@ class PartSpecSpec extends graft.SparkSpecBase {
     val spec = PartSpec.parse("l_returnflag,l_linestatus")
     val root = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
     val snap = CommitLog(spark, s"$root/fact").snapshot()
-    assert(snap.parts.nonEmpty)
-    val decoded = snap.parts.values.toSet.map((t: String) => spec.decode(t))
+    assert(snap.tagged)
+    val decoded = snap.entries.values.flatMap(_.partTag).toSet.map((t: String) => spec.decode(t))
     assert(decoded === Set(Seq("A", "F"), Seq("A", "O"), Seq("N", "F"),
       Seq("N", "O"), Seq("R", "F"), Seq("R", "O")))
     withSpj {
@@ -227,7 +227,7 @@ class PartSpecSpec extends graft.SparkSpecBase {
     // only the (A,F) partition's files were retired; others survive as-is
     val spec = PartSpec.parse("f,s")
     val untouched = before.files.filter(f =>
-      spec.decode(before.parts(f)) != Seq("A", "F"))
+      spec.decode(before.entry(f).partTag.get) != Seq("A", "F"))
     assert(untouched.forall(after.files.contains))
     assert(spark.table(s"$cat.t").orderBy("f", "s", "id")
       .as[(String, String, Long, Long)].collect().toSeq
@@ -294,8 +294,8 @@ class PartSpecSpec extends graft.SparkSpecBase {
     val root = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
     val log = CommitLog(spark, s"$root/t")
     val s0 = log.snapshot()
-    assert(s0.files.forall(s0.parts.contains), "all-tagged invariant")
-    assert(s0.files.map(s0.parts).toSet.subsetOf(Set("0", "1", "2", "3")))
+    assert(s0.files.forall(s0.entry(_).partTag.isDefined), "all-tagged invariant")
+    assert(s0.files.map(s0.entry(_).partTag.get).toSet.subsetOf(Set("0", "1", "2", "3")))
     assert(spark.table(s"$cat.t").count() === 40L)
     // runtime pruning: an id IN-probe keeps only its bucket's files
     val spec = PartSpec.parse("bucket(4,id)")
@@ -303,7 +303,7 @@ class PartSpecSpec extends graft.SparkSpecBase {
     val want = spec.componentOfLiteral(0, probe).get
     val kept = log.candidateFilesForInValues(s0, s0.files, "id",
       Seq(probe), partKey = Some((spec, 0)))
-    assert(kept.nonEmpty && kept.forall(f => s0.parts(f) == want),
+    assert(kept.nonEmpty && kept.forall(f => s0.entry(f).partTag.get == want),
       s"bucket probe must keep only bucket $want")
     // partition-scoped merge touches only the written buckets
     log.upsertPartitioned(Seq((11L, "UPD")).toDF("id", "v"),
@@ -357,16 +357,16 @@ class PartSpecSpec extends graft.SparkSpecBase {
       Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString("R"),
         StringType)), partKey = Some((spec, 0)))
     assert(keptF.nonEmpty
-      && keptF.forall(f => spec.decode(s0.parts(f)).head == "R")
-      && s0.files.filter(f => spec.decode(s0.parts(f)).head == "R")
+      && keptF.forall(f => spec.decode(s0.entry(f).partTag.get).head == "R")
+      && s0.files.filter(f => spec.decode(s0.entry(f).partTag.get).head == "R")
         .forall(keptF.contains))
     // IN-set on the SECOND component: keeps exactly the s=O files
     val keptS = log.candidateFilesForInValues(s0, s0.files, "s",
       Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString("O"),
         StringType)), partKey = Some((spec, 1)))
     assert(keptS.nonEmpty
-      && keptS.forall(f => spec.decode(s0.parts(f))(1) == "O")
-      && s0.files.filter(f => spec.decode(s0.parts(f))(1) == "O")
+      && keptS.forall(f => spec.decode(s0.entry(f).partTag.get)(1) == "O")
+      && s0.files.filter(f => spec.decode(s0.entry(f).partTag.get)(1) == "O")
         .forall(keptS.contains))
   }
 }

@@ -84,7 +84,7 @@ class PredicatePruningSpec extends graft.SparkSpecBase {
     val log = CommitLog(spark,
       spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/t")
     val noNullFile = log.snapshot().files.find(f =>
-      log.snapshot().nulls.get(f).flatMap(_.get("v")).contains(0L)).get
+      log.snapshot().entry(f).nulls.get("v").contains(0L)).get
     log.delete($"v".isNull)
     assert(log.snapshot().files.contains(noNullFile),
       "the provably no-null file must ride through the delete untouched")

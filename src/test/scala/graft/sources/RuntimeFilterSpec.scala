@@ -114,7 +114,7 @@ class RuntimeFilterSpec extends graft.SparkSpecBase {
     val s = log.snapshot()
     assert(s.files.size === 3)
     def fileOfMin(lo: Long): String = s.files.find(f =>
-      s.stats(f)("id")._1 == lo).get
+      s.entry(f).colStats("id")._1 == lo).get
 
     // stats: IN (100, 150) admits only the [100,101] file (150 hits
     // no range), regardless of input order
@@ -140,7 +140,7 @@ class RuntimeFilterSpec extends graft.SparkSpecBase {
     val byTag = logP.candidateFilesForInValues(sp, sp.files, "flag",
       Seq(Literal(org.apache.spark.unsafe.types.UTF8String.fromString("B"),
         org.apache.spark.sql.types.StringType)), partKey = Some((PartSpec.parse("flag"), 0)))
-    assert(byTag.map(sp.parts) === Seq("B"))
+    assert(byTag.map(sp.entry(_).partTag.get) === Seq("B"))
   }
 
   test("candidateFilesForInValues: stats-less files survive; nulls match nothing") {
@@ -153,8 +153,8 @@ class RuntimeFilterSpec extends graft.SparkSpecBase {
     // rebalance (r19) is free to change
     log.append(Seq((100L, "b", 5.0)).toDF("id", "v", "extra").coalesce(1))
     val s = log.snapshot()
-    val old = s.files.find(f => !s.stats(f).contains("extra")).get
-    val young = s.files.find(f => s.stats(f).contains("extra")).get
+    val old = s.files.find(f => !s.entry(f).colStats.contains("extra")).get
+    val young = s.files.find(f => s.entry(f).colStats.contains("extra")).get
 
     // a file with no stats for the probed column cannot be ruled out
     val kept = log.candidateFilesForInValues(s, s.files, "extra",

@@ -90,7 +90,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     CommitLog(spark, t).append(Seq(10L).toDF("v").coalesce(1))
     val snap = CommitLog(spark, t).snapshot()
     assert(snap.files.forall(f =>
-      snap.stats(f).contains(CommitLog.SumKeyPrefix + "v")),
+      snap.entry(f).sums.contains("v")),
       "every file must carry the sum partial")
   }
 
@@ -149,7 +149,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
       spark.conf.unset("spark.graft.dv.minTouchedBytes")
       spark.conf.unset("spark.graft.dv.sumDeltas.enabled")
     }
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty,
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs,
       "the delete must have taken the DV path")
     val q = spark.table(s"$cat.t").agg(sum($"id").as("s"))
     assert(!manifestAnswered(q), "a masked row's value is baked into the partial")
@@ -178,7 +178,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
       log.delete($"id" === 91L) // masked NULL n (91 = 7 * 13)
     } finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val snap = CommitLog(spark, s"$wh/t").snapshot()
-    assert(snap.dvs.valuesIterator.flatten.size === 3,
+    assert(snap.entries.values.iterator.flatMap(_.dvs).size === 3,
       "all three deletes must take the DV path")
     val live = (0L until 98L).filter(_ != 91L)
     val q = spark.table(s"$cat.t").agg(
@@ -228,7 +228,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     try log.update($"id" >= 48L, Map("price" -> expr("price + 1000")))
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val snap = CommitLog(spark, s"$wh/t").snapshot()
-    assert(snap.dvs.nonEmpty, "the update must take the merge-on-read path")
+    assert(snap.hasDvs, "the update must take the merge-on-read path")
     val q = spark.table(s"$cat.t").agg(sum($"price").as("s_p"))
     assert(manifestAnswered(q),
       "the masked originals are subtracted, the rewrites carry fresh partials:\n"
@@ -314,8 +314,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     val (v0, n) = log.harvestSums(Seq("v"))
     assert(n === 0, "an unrepresentable sum must not commit a restatement")
     val snap = log.snapshot()
-    assert(snap.files.forall(f => !snap.stats.getOrElse(f, Map.empty)
-        .contains(CommitLog.SumKeyPrefix + "v")),
+    assert(snap.files.forall(f => !snap.entry(f).sums.contains("v")),
       "the overflowed partial must stay ABSENT, not zero")
     // the refused fold falls back to a real scan — which under ANSI
     // throws the overflow. A silently-stored ZERO partial would have
@@ -352,7 +351,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
       CommitLog(spark, s"$wh/t").delete($"id" === 55L) // b NULL (accumulates)
     } finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val snap = CommitLog(spark, s"$wh/t").snapshot()
-    assert(snap.dvs.valuesIterator.flatten.map(_.count).sum === 2L,
+    assert(snap.entries.values.iterator.flatMap(_.dvs).map(_.count).sum === 2L,
       "both deletes must take the DV path")
     val live = (0L until 55L) ++ Seq(56L, 57L, 58L)
     val q = spark.table(s"$cat.t").agg(
@@ -394,14 +393,12 @@ class SumStatsSpec extends graft.SparkSpecBase {
       CommitLog(spark, s"$wh/t").delete($"id" === 38L || $"id" === 79L)
     } finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val snap = CommitLog(spark, s"$wh/t").snapshot()
-    assert(snap.dvs.size === 2, "both files must carry DVs")
+    assert(snap.entries.values.count(_.dvs.nonEmpty) === 2, "both files must carry DVs")
     val f1 = snap.files.find(f =>
-      snap.dvs.getOrElse(f, Nil).iterator.map(_.count).sum === 2L).get
-    assert(!snap.stats.getOrElse(f1, Map.empty)
-        .contains(CommitLog.SumNPrefix + "b"),
+      snap.entry(f).dvs.iterator.map(_.count).sum === 2L).get
+    assert(!snap.entry(f1).liveNonNull.contains("b"),
       "no live count may be minted without evidence")
-    assert(snap.stats.getOrElse(f1, Map.empty)
-        .contains(CommitLog.SumNPrefix + "id"),
+    assert(snap.entry(f1).liveNonNull.contains("id"),
       "the evidenced column keeps its live count")
     val live = (0L until 38L) ++ (40L until 79L)
     val qb = spark.table(s"$cat.t").agg(count($"b").as("c"))
@@ -440,7 +437,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
       spark.conf.unset("spark.graft.dv.minTouchedBytes")
       spark.conf.unset("spark.graft.dv.sumDeltas.enabled")
     }
-    assert(log.snapshot().dvs.nonEmpty)
+    assert(log.snapshot().hasDvs)
     val q0 = spark.table(s"$cat.t").agg(count($"txt").as("c"))
     assert(!manifestAnswered(q0), "the legacy DV must refuse COUNT(txt)")
     val (_, n) = log.harvestSums() // no sum config: pure count repair
@@ -509,7 +506,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     spark.conf.set("spark.graft.dv.minTouchedBytes", "0")
     try log.delete($"id" === 49L)                           // v2: accounted DV
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.nonEmpty)
+    assert(CommitLog(spark, s"$wh/t").snapshot().hasDvs)
     val cur = spark.table(s"$cat.t").agg(sum($"id").as("s"))
     assert(manifestAnswered(cur))
     assert(cur.collect().head.getLong(0) === (0L until 49L).sum)
@@ -520,7 +517,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     assert(tt.collect().head.getLong(0) === (0L until 50L).sum)
     // OPTIMIZE retires the DV and re-harvests fresh partials
     log.optimize(1)                                         // v3
-    assert(CommitLog(spark, s"$wh/t").snapshot().dvs.isEmpty)
+    assert(!CommitLog(spark, s"$wh/t").snapshot().hasDvs)
     val qo = spark.table(s"$cat.t").agg(sum($"id").as("s"))
     assert(manifestAnswered(qo))
     assert(qo.collect().head.getLong(0) === (0L until 49L).sum)
@@ -546,9 +543,7 @@ class SumStatsSpec extends graft.SparkSpecBase {
     val q = spark.table(s"$cat.t").groupBy($"g")
       .agg(sum($"id").as("s"), count(lit(1)).as("n")).orderBy($"g")
     assert(manifestAnswered(q), "grouped sums must fold:\n"
-      + dbg.files.map(f => s"$f parts=${dbg.parts.get(f)} " +
-        s"keys=${dbg.stats.get(f).map(_.keys.mkString("|"))} " +
-        s"rows=${dbg.rows.get(f)} nulls=${dbg.nulls.get(f)}").mkString("\n")
+      + dbg.files.map(dbg.entry).mkString("\n")
       + "\n" + q.queryExecution.executedPlan)
     val rows = q.collect()
     assert(rows.map(_.getString(0)).toSeq === Seq("0", "1", "2"))

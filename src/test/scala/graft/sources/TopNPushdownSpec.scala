@@ -154,7 +154,7 @@ class TopNPushdownSpec extends graft.SparkSpecBase {
     try log.delete(col("id") > 204L && col("id") <= 229L)
     finally spark.conf.unset("spark.graft.dv.minTouchedBytes")
     val snap = log.snapshot()
-    assert(snap.dvs.nonEmpty, "the delete must have taken the DV path")
+    assert(snap.hasDvs, "the delete must have taken the DV path")
     val q = spark.table(s"$cat.t").orderBy($"id".desc).limit(80)
     assert(scannedFiles(q) === 2,
       s"a masked dominator must not over-cover:\n${q.queryExecution}")
